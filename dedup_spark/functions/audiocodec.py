@@ -666,7 +666,7 @@ def _block_frames(d: bytes, i: int, hi: int) -> list[tuple[int, int]]:
     """Frame spans of one Matroska (Simple)Block body after the track
     vint: 2-byte timestamp + flags, then no/Xiph/fixed/EBML lacing
     (RFC 9559 §10): laced sizes cover all but the last frame, which
-    takes the remainder."""
+    takes the remainder (so a one-frame lace carries no sizes)."""
     if i + 3 > hi:
         raise AudioDecodeError("truncated Matroska block")
     flags = d[i + 2]
@@ -691,7 +691,7 @@ def _block_frames(d: bytes, i: int, hi: int) -> list[tuple[int, int]]:
                 if last:
                     break
             sizes.append(size)
-    elif lace == 0x06:  # EBML: first size a vint, then signed deltas
+    elif lace == 0x06 and n_frames > 1:  # EBML: a vint, then signed deltas
         from dedup_spark.functions.containers import _read_vint
 
         size, j = _read_vint(d, i, keep_marker=False)
@@ -706,7 +706,7 @@ def _block_frames(d: bytes, i: int, hi: int) -> list[tuple[int, int]]:
                 raise AudioDecodeError("negative EBML lace size")
             i = j
             sizes.append(size)
-    else:  # 0x04 fixed: equal split of the remainder
+    elif lace == 0x04:  # fixed: equal split of the remainder
         body = hi - i
         if n_frames == 0 or body % n_frames:
             raise AudioDecodeError("fixed lacing does not divide block")

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import struct
 
+from dedup_spark.functions.formats import LEGACY_QT, QT_ATOMS, decoder_row
+
 
 class ContainerParseError(ValueError):
     """Typed parse failure — the stub-policy catch for containers."""
@@ -556,7 +558,7 @@ def parse_mp4(payload: bytes) -> dict:
                                 handlers.append(
                                     d[ha + 8 : ha + 12].decode("ascii", "replace")
                                 )
-    if not saw_box or not (brand or first_type in _QT_LEAD_ATOMS):
+    if not saw_box or not (brand or first_type in QT_ATOMS):
         raise ContainerParseError(
             "not an ISO-BMFF file (no ftyp, not QuickTime-atom-led)"
         )
@@ -576,21 +578,14 @@ def _box(btype: bytes, body: bytes) -> bytes:
     return struct.pack(">I", 8 + len(body)) + btype + body
 
 
-# atoms a legacy (pre-ftyp) QuickTime file may open with
-_QT_LEAD_ATOMS = (b"moov", b"mdat", b"wide", b"free", b"skip", b"pnot")
-
-
 def _qt_atom_led(d: bytes) -> bool:
     """True when the payload opens with a legacy QuickTime top-level
     atom AND the leading 32-bit box size is plausible (8..file size) —
     the size check keeps arbitrary text with 'free'/'skip' at offset 4
-    from sniffing as video (kept in lockstep with both kind
-    sniffers in operators/multimodal.py)."""
-    return (
-        len(d) >= 16
-        and d[4:8] in _QT_LEAD_ATOMS
-        and 8 <= int.from_bytes(d[:4], "big") <= len(d)
-    )
+    from sniffing as video. This is the legacy-QuickTime row of the
+    format table (functions/formats.py), the one predicate every
+    router reads."""
+    return LEGACY_QT.matches(d)
 
 
 def encode_mp4(duration_ms: int, handlers: list[str],
@@ -1153,13 +1148,6 @@ def mpeg_ts_packet_size(payload: bytes) -> int:
     return 204 if s204 > s188 else 188
 
 
-def is_mpeg_ts_prefix(payload: bytes) -> bool:
-    """MPEG transport stream probe — the single shared definition
-    behind the Python sniffer, the JVM router column, the
-    orchestrator retry filter and parse_container."""
-    return mpeg_ts_packet_size(payload) != 0
-
-
 # ISO 13818-1 stream_type values that mean VIDEO — the refusal set for
 # the audio path (a TS with ANY of these is a video file) and the
 # codec-naming map for parse_mpeg_ts. Decoding itself supports only
@@ -1239,25 +1227,11 @@ def parse_mpeg_ts(payload: bytes) -> dict:
 
 
 def parse_container(payload: bytes) -> dict:
-    """Route by magic to the right structural parser; raises
+    """Route by magic to the right structural parser (the ``parse``
+    decoder of the payload's format-table row); raises
     ContainerParseError for anything unrecognized."""
     d = payload or b""
-    if d[:4] == b"\x1a\x45\xdf\xa3":
-        return parse_mkv(d)
-    if d[:4] == b"\x00\x00\x01\xba":
-        return parse_mpeg_ps(d)
-    if d[:4] == b"FLV\x01":
-        return parse_flv(d)
-    if d[:16] == _ASF_HEADER:
-        return parse_asf(d)
-    if is_mpeg_ts_prefix(d):
-        return parse_mpeg_ts(d)
-    if d[4:8] == b"ftyp" or _qt_atom_led(d):
-        return parse_mp4(d)
-    if d[:4] == b"OggS":
-        return parse_ogg(d)
-    if len(d) >= 2 and d[0] == 0xFF and (d[1] & 0xF6) == 0xF0:
-        return parse_adts(d)  # 0xFFF sync with layer 00 — never MPEG audio
-    if d[:3] == b"ID3" or (len(d) >= 2 and d[0] == 0xFF and (d[1] & 0xE0) == 0xE0):
-        return parse_mp3(d)
-    raise ContainerParseError("unrecognized container magic")
+    row = decoder_row(d, "parse")
+    if row is None:
+        raise ContainerParseError("unrecognized container magic")
+    return row.parse(d)

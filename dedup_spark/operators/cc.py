@@ -122,7 +122,6 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 20,
     config: DedupConfig | None = None,
 ) -> DataFrame:
     """(node, cluster_id) for every node appearing in ``pairs``; the
@@ -135,7 +134,9 @@ def connected_components(
     - larger → alternating large/small-star rounds (scales to graphs
       no single task can hold). The count needed for the decision
       comes from the convergence checksum's first job — no extra
-      action.
+      action. The loop runs at most ``config.cc_max_iterations`` rounds
+      and raises RuntimeError when the edge set is still changing
+      after the last one — labels are never returned unconverged.
     """
     from dedup_spark.checkpoint import lineage_cut
 
@@ -150,12 +151,17 @@ def connected_components(
     prev = _checksum(edges)  # materializes the cut in the same job
     if prev[0] <= cfg.cc_smallgraph_threshold:
         return _union_find_cc(edges)
-    for _ in range(max_iterations):
+    for _ in range(cfg.cc_max_iterations):
         edges = lineage_cut(_small_star(_large_star(edges)), cfg, eager=False)
         cur = _checksum(edges)
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in "
+            f"cc_max_iterations={cfg.cc_max_iterations} star rounds"
+        )
     # converged star edges: u -> root(v). Roots map to themselves.
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     roots = edges.select(F.col("v").alias("node"), F.col("v").alias("cluster_id")).distinct()

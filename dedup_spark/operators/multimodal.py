@@ -30,6 +30,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# payload routing (kind, JVM kind column, format token) and every decoder
+# lookup read the one format table; the sniffers are re-exported here
+from dedup_spark.functions.formats import (
+    FORMATS,
+    decoder_row,
+    detect_kind_from_magic,
+    kind_from_magic_col,
+    load,
+    match,
+    retry_col,
+    sniff_media_format,
+)
+
 ASSET_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
@@ -47,367 +60,6 @@ META_FIELDS = [
     StructField("byte_entropy_q", LongType(), False),   # 0-1000 quantized
 ]
 META_SCHEMA = StructType(META_FIELDS)
-
-# magic-byte table (public file-format signatures)
-_MAGIC_KINDS = {
-    "89504e47": "image",  # PNG
-    "47494638": "image",  # GIF87a/GIF89a ("GIF8")
-    "49492a00": "image",  # TIFF little-endian ("II*\\0") — also ARW/NEF/CR2
-    "4d4d002a": "image",  # TIFF big-endian ("MM\\0*")
-    "4949524f": "image",  # Olympus ORF ("IIRO" — TIFF layout, RO magic word)
-    "49495253": "image",  # Olympus ORF variant ("IIRS")
-    "49495500": "image",  # Panasonic RW2 ("II\\x55\\0" — TIFF layout)
-    "ffd8ffe0": "image",  # JPEG/JFIF (see 3-byte prefix rule below)
-    "716f6966": "image",  # QOI ("qoif")
-    "44445320": "image",  # DDS ("DDS ")
-    "49443303": "audio",  # MP3/ID3
-    "2e736e64": "audio",  # Sun AU (".snd")
-    "664c6143": "audio",  # FLAC ("fLaC")
-    "4f676753": "audio",  # Ogg ("OggS") — Vorbis et al.
-    "1a45dfa3": "video",  # Matroska/WebM
-    "59555634": "video",  # "YUV4" — YUV4MPEG2 raw video
-    "000001b3": "video",  # MPEG-1 video elementary stream (sequence hdr)
-    "000001ba": "video",  # MPEG program stream (pack header)
-    "464c5601": "video",  # FLV ("FLV" + version 1)
-    "3026b275": "video",  # ASF/WMV/WMA (header-object GUID prefix)
-}
-
-
-def _is_mpeg_ts(payload: bytes) -> bool:
-    """MPEG transport stream probe — delegates to the single shared
-    definition in functions/containers.py (a lone 'G' prefix is far
-    too weak; three packet-boundary syncs is the standard
-    ffprobe-style heuristic)."""
-    from dedup_spark.functions.containers import is_mpeg_ts_prefix
-
-    return is_mpeg_ts_prefix(payload)
-
-
-def _mpeg_ts_probe_col(payload: "F.Column") -> "F.Column":
-    """The same triple-sync probe as a JVM Column expression — the one
-    builder behind both the kind router and the orchestrator's
-    audio-retry filter, kept byte-for-byte with is_mpeg_ts_prefix."""
-    plain = (
-        (F.length(payload) >= 3 * 188)
-        & (F.substring(payload, 1, 1) == F.lit(b"\x47"))
-        & (F.substring(payload, 189, 1) == F.lit(b"\x47"))
-        & (F.substring(payload, 377, 1) == F.lit(b"\x47"))
-    )
-    dvb = (  # 204-byte DVB capture stride (16 RS parity bytes/packet)
-        (F.length(payload) >= 3 * 204)
-        & (F.substring(payload, 1, 1) == F.lit(b"\x47"))
-        & (F.substring(payload, 205, 1) == F.lit(b"\x47"))
-        & (F.substring(payload, 409, 1) == F.lit(b"\x47"))
-    )
-    return plain | dvb
-
-
-def detect_kind_from_magic(payload: bytes | None) -> str:
-    """F6 analog (detect_media_type by magic bytes then extension,
-    /root/reference/src/media_dedup.rs:136-166): sniff the payload
-    header; unknown → 'blob'. JPEG matches on the ffd8ff 3-byte SOI
-    prefix — the 4th byte varies by flavor (e0 JFIF, e1 EXIF, db raw
-    quantization-table-first), all of them JPEG images."""
-    if not payload or len(payload) < 4:
-        return "blob"
-    if payload[:3] == b"\xff\xd8\xff":
-        return "image"
-    # BMP's signature is only 2 bytes ("BM") — too weak alone (any text
-    # starting "BM…" would sniff as image). Require the 4 reserved-zero
-    # header bytes at offsets 6-9 too, like the RIFF form-type check.
-    if payload[:2] == b"BM" and len(payload) >= 10 and payload[6:10] == b"\x00\x00\x00\x00":
-        return "image"
-    if payload[:8] == b"farbfeld":
-        return "image"
-    if payload[:10] == b"#?RADIANCE" or payload[:6] == b"#?RGBE":
-        return "image"
-    # PNM BINARY variants only (P4/P5/P6 + whitespace + digit/comment):
-    # the ASCII variants (P1-P3) are indistinguishable from plain text
-    # at the magic layer, so routing stays conservative — decode_pixels
-    # still accepts P1-P3 when an asset is already kind-tagged image
-    if (
-        payload[:1] == b"P"
-        and payload[1:2] in (b"4", b"5", b"6")
-        and payload[2:3] in (b" ", b"\t", b"\r", b"\n")
-        and (payload[3:4].isdigit()
-             or payload[3:4] in (b"#", b" ", b"\t", b"\r", b"\n"))
-    ):
-        return "image"
-    # ICO: reserved 0000 + type 0100 + sane entry count (1-64); a
-    # false positive only costs the decode-fail reroute to byte-shingles
-    if (
-        payload[:4] == b"\x00\x00\x01\x00"
-        and len(payload) >= 6
-        and payload[5] == 0
-        and 1 <= payload[4] <= 64
-    ):
-        return "image"
-    if payload[:4] == b"RIFF" and len(payload) >= 12:
-        # RIFF is a container: the kind lives at bytes 8-12
-        if payload[8:12] == b"WAVE":
-            return "audio"
-        if payload[8:12] == b"AVI ":
-            return "video"
-    if payload[:4] == b"FORM" and len(payload) >= 12 and payload[8:12] in (
-        b"AIFF", b"AIFC"
-    ):
-        return "audio"
-    if payload[:4] == b"RIFF" and len(payload) >= 12 and payload[8:12] == b"WEBP":
-        return "image"
-    if payload[:4] == b"\x76\x2f\x31\x01":
-        return "image"  # OpenEXR
-    kind = _MAGIC_KINDS.get(payload[:4].hex())
-    if kind is not None:
-        return kind
-    # ISO-BMFF (MP4 family) signs at offset 4 — checked AFTER the
-    # 4-byte magic families, same order as kind_from_magic_col;
-    # audio-only m4a reroutes downstream (decode fails → blob path)
-    if len(payload) >= 8 and payload[4:8] == b"ftyp":
-        return "video"
-    # legacy QuickTime .mov predates ftyp: a top-level moov/mdat/wide/
-    # free/skip/pnot atom at offset 4 with a PLAUSIBLE leading box size
-    # (8..file size — so text with "free" at offset 4 stays a blob)
-    if (
-        len(payload) >= 16
-        and payload[4:8] in (b"moov", b"mdat", b"wide", b"free", b"skip", b"pnot")
-        and 8 <= int.from_bytes(payload[:4], "big") <= len(payload)
-    ):
-        return "video"
-    # MPEG transport stream: sync bytes at three packet boundaries
-    if _is_mpeg_ts(payload):
-        return "video"
-    # raw MPEG-audio frame sync (MP3 without an ID3 tag): 11-bit sync
-    # plus VALIDATED header fields (layer != reserved, version !=
-    # reserved, bitrate != bad, samplerate != reserved) so arbitrary
-    # 0xFF-led binaries stay blobs; a false positive only costs the
-    # decode-fail reroute back to the byte-shingle path
-    b1, b2 = payload[1], payload[2]
-    if (payload[0] == 0xFF and (b1 & 0xE0) == 0xE0 and (b1 & 0x06) != 0
-            and (b1 & 0x18) != 0x08 and (b2 & 0xF0) != 0xF0
-            and (b2 & 0x0C) != 0x0C):
-        return "audio"
-    return "blob"
-
-
-def kind_from_magic_col(payload: "F.Column") -> "F.Column":
-    """``detect_kind_from_magic`` as a pure COLUMN expression (JVM
-    codegen — no Python UDF in the routing hot path): sniff the hex of
-    the first 12 payload bytes. Kept bit-for-bit in sync with the
-    Python function; ``test_kind_column_matches_python`` pins the
-    equivalence over every magic family and garbage."""
-    hx = F.lower(F.hex(F.substring(payload, 1, 12)))
-    return (
-        F.when(F.length(hx) < 8, "blob")
-        .when(hx.startswith("ffd8ff"), "image")                       # JPEG (3-byte SOI)
-        .when(
-            hx.startswith("424d") & (F.substring(hx, 13, 8) == "00000000"),
-            "image",                                                  # BMP + reserved zeros
-        )
-        .when(F.substring(hx, 1, 16) == "6661726266656c64", "image")  # farbfeld
-        .when(
-            (F.substring(hx, 1, 20) == "233f52414449414e4345")        # "#?RADIANCE"
-            | (F.substring(hx, 1, 12) == "233f52474245"),             # "#?RGBE"
-            "image",
-        )
-        .when(
-            # PNM binary variants (P4/P5/P6 + ws + digit/comment/ws),
-            # byte for byte the Python sniffer's predicate
-            (_hex_byte(hx, 0) == 0x50)
-            & _hex_byte(hx, 1).isin(0x34, 0x35, 0x36)
-            & _hex_byte(hx, 2).isin(0x20, 0x09, 0x0A, 0x0D)
-            & (
-                ((_hex_byte(hx, 3) >= 0x30) & (_hex_byte(hx, 3) <= 0x39))
-                | _hex_byte(hx, 3).isin(0x23, 0x20, 0x09, 0x0A, 0x0D)
-            ),
-            "image",
-        )
-        .when(
-            # ICO: reserved+type bytes and a sane entry count (1-64)
-            hx.startswith("00000100")
-            & (_hex_byte(hx, 4) >= 1)
-            & (_hex_byte(hx, 4) <= 64)
-            & (_hex_byte(hx, 5) == 0),
-            "image",
-        )
-        .when(hx.startswith("89504e47"), "image")                     # PNG
-        .when(hx.startswith("716f6966"), "image")                     # QOI ("qoif")
-        .when(hx.startswith("44445320"), "image")                     # DDS ("DDS ")
-        .when(hx.startswith("47494638"), "image")                     # GIF87a/89a
-        .when(hx.startswith("49492a00"), "image")                     # TIFF "II" (+ ARW/NEF/CR2)
-        .when(hx.startswith("4d4d002a"), "image")                     # TIFF "MM"
-        .when(hx.startswith("4949524f"), "image")                     # ORF "IIRO"
-        .when(hx.startswith("49495253"), "image")                     # ORF "IIRS"
-        .when(hx.startswith("49495500"), "image")                     # RW2 "II\\x55\\0"
-        .when(
-            hx.startswith("52494646") & (F.substring(hx, 17, 8) == "57415645"),
-            "audio",                                                  # RIFF/WAVE
-        )
-        .when(
-            hx.startswith("52494646") & (F.substring(hx, 17, 8) == "41564920"),
-            "video",                                                  # RIFF/AVI
-        )
-        .when(
-            hx.startswith("52494646") & (F.substring(hx, 17, 8) == "57454250"),
-            "image",                                                  # RIFF/WEBP
-        )
-        .when(hx.startswith("762f3101"), "image")                     # OpenEXR
-        .when(
-            hx.startswith("464f524d")
-            & F.substring(hx, 17, 8).isin("41494646", "41494643"),
-            "audio",                                                  # FORM/AIFF(-C)
-        )
-        .when(hx.startswith("2e736e64"), "audio")                     # Sun AU ".snd"
-        .when(hx.startswith("59555634"), "video")                     # "YUV4" Y4M
-        .when(hx.startswith("49443303"), "audio")                     # MP3/ID3
-        .when(hx.startswith("664c6143"), "audio")                     # FLAC
-        .when(hx.startswith("4f676753"), "audio")                     # Ogg ("OggS")
-        .when(hx.startswith("1a45dfa3"), "video")                     # Matroska/WebM
-        .when(hx.startswith("000001b3"), "video")                     # MPEG-1/2 ES
-        .when(hx.startswith("000001ba"), "video")                     # MPEG program stream
-        .when(hx.startswith("464c5601"), "video")                     # FLV
-        .when(hx.startswith("3026b275"), "video")                     # ASF/WMV
-        .when(F.substring(hx, 9, 8) == "66747970", "video")           # ISO-BMFF "ftyp"
-        .when(
-            # legacy QuickTime .mov: moov/mdat/wide/free/skip/pnot at
-            # offset 4 + a plausible leading box size (8..file size),
-            # byte for byte the Python sniffer's predicate
-            F.substring(hx, 9, 8).isin(
-                "6d6f6f76", "6d646174", "77696465",
-                "66726565", "736b6970", "706e6f74",
-            )
-            & (F.length(payload) >= 16)
-            & (F.conv(F.substring(hx, 1, 8), 16, 10).cast("long") >= 8)
-            & (
-                F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
-                <= F.length(payload)
-            ),
-            "video",
-        )
-        .when(
-            # MPEG transport stream: the shared triple-sync probe
-            # (offsets are beyond the 12-byte hex window, so it reads
-            # the binary directly)
-            _mpeg_ts_probe_col(payload),
-            "video",
-        )
-        .when(
-            # raw MPEG-audio frame sync with validated header fields
-            # (same predicate as the Python sniffer, byte for byte)
-            hx.startswith("ff")
-            & (_hex_byte(hx, 1).bitwiseAND(0xE0) == 0xE0)
-            & (_hex_byte(hx, 1).bitwiseAND(0x06) != 0)
-            & (_hex_byte(hx, 1).bitwiseAND(0x18) != 0x08)
-            & (_hex_byte(hx, 2).bitwiseAND(0xF0) != 0xF0)
-            & (_hex_byte(hx, 2).bitwiseAND(0x0C) != 0x0C),
-            "audio",
-        )
-        .otherwise("blob")
-    )
-
-
-def _hex_byte(hx: "F.Column", i: int) -> "F.Column":
-    """Byte i of a lowercase-hex string column, as a long."""
-    return F.conv(F.substring(hx, 2 * i + 1, 2), 16, 10).cast("long")
-
-
-def sniff_media_format(payload: bytes | None) -> str | None:
-    """Reference-style FORMAT token from payload magic, or None.
-
-    The reference keys its keeper ranking on the lowercased file
-    extension (media_dedup.rs:170-175: ``path.extension()…
-    to_lowercase()`` becomes ``MediaMetadata.format``, ranked against
-    the format-preference list at media_dedup.rs:436-452). Synthesized
-    assets carry no path, so the engine derives the SAME token from
-    the bytes — strictly stronger than trusting the extension, and
-    identical for correctly-named files. Tokens match the reference's
-    default preference list where a list entry exists (arw/cr2/nef/
-    orf/rw2/png/tiff/bmp/jpeg/mp4/mov/mp3/flac/wav); other recognized
-    families return their conventional extension token (gif, mkv,
-    avi, ogg, aac, y4m, mpg, mp1, mp2), which — like any extension
-    absent from the list — ranks after every listed format, exactly
-    the reference's unwrap_or(usize::MAX)."""
-    d = payload or b""
-    if len(d) < 12:
-        return None
-    if d[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if d[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    if d[:2] == b"BM" and d[6:10] == b"\x00\x00\x00\x00":
-        return "bmp"
-    if d[:5] in (b"GIF87", b"GIF89"):
-        return "gif"
-    if d[:1] == b"P" and d[1:2] in b"123456" and d[2:3] in b" \t\r\n":
-        return {b"1": "pbm", b"4": "pbm", b"2": "pgm",
-                b"5": "pgm", b"3": "ppm", b"6": "ppm"}[d[1:2]]
-    if d[:4] == b"qoif":
-        return "qoi"
-    if d[:8] == b"farbfeld":
-        return "ff"
-    if d[:10] == b"#?RADIANCE" or d[:6] == b"#?RGBE":
-        return "hdr"
-    if d[:4] == b"DDS ":
-        return "dds"
-    # TGA: no leading magic — token only derivable from a path
-    # extension, which payload-only sniffing does not have
-    if (d[:4] == b"\x00\x00\x01\x00" and d[5] == 0 and 1 <= d[4] <= 64):
-        return "ico"
-    if d[:4] in (b"IIRO", b"IIRS"):
-        return "orf"
-    if d[:4] == b"II\x55\x00":
-        return "rw2"
-    if d[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-        from dedup_spark.functions.rawimage import detect_raw_flavor
-
-        return detect_raw_flavor(d) or "tiff"
-    if d[:4] == b"fLaC":
-        return "flac"
-    if d[:4] == b"OggS":
-        return "ogg"
-    if d[:4] == b"\x1aE\xdf\xa3":
-        return "mkv"
-    if d[:4] == b"RIFF":
-        if d[8:12] == b"WAVE":
-            return "wav"
-        if d[8:12] == b"AVI ":
-            return "avi"
-        if d[8:12] == b"WEBP":
-            return "webp"
-        return None
-    if d[:4] == b"\x76\x2f\x31\x01":
-        return "exr"
-    if d[:4] == b"FORM" and d[8:12] in (b"AIFF", b"AIFC"):
-        return "aiff"
-    if d[:4] == b".snd":
-        return "au"
-    if d[:9] == b"YUV4MPEG2":
-        return "y4m"
-    if d[:3] == b"ID3":
-        return "mp3"
-    if d[:4] == b"\x00\x00\x01\xb3":
-        return "mpg"
-    if d[:4] == b"\x00\x00\x01\xba":
-        return "mpg"  # program stream: the classic .mpg layout
-    if d[:4] == b"FLV\x01":
-        return "flv"
-    if d[:4] == b"\x30\x26\xb2\x75":
-        return "wmv"  # ASF family: .wmv/.wma/.asf
-    if _is_mpeg_ts(d):
-        return "ts"
-    if d[4:8] == b"ftyp":
-        return "mov" if d[8:12] == b"qt  " else "mp4"
-    if d[4:8] in (b"moov", b"mdat", b"wide", b"free", b"skip", b"pnot") and (
-        8 <= int.from_bytes(d[:4], "big") <= len(d)
-    ):
-        return "mov"  # legacy pre-ftyp QuickTime
-    b1, b2 = d[1], d[2]
-    if d[0] == 0xFF and (b1 & 0xF6) == 0xF0:
-        return "aac"  # ADTS: 0xFFF sync, layer bits 00
-    if (d[0] == 0xFF and (b1 & 0xE0) == 0xE0 and (b1 & 0x06) != 0
-            and (b1 & 0x18) != 0x08 and (b2 & 0xF0) != 0xF0
-            and (b2 & 0x0C) != 0x0C):
-        return {3: "mp1", 2: "mp2", 1: "mp3"}[(b1 >> 1) & 3]
-    return None
 
 
 def decode_asset(payload: bytes, kind: str, fake: bool = False) -> dict:
@@ -557,6 +209,82 @@ def _fake_duration_ms(payload: bytes) -> int:
     return max(1000, (len(payload) * 1000) // 1024)
 
 
+def _fake_samples(payload: bytes):
+    """DECODE STUB (deterministic fake): derive a mono sample stream
+    from the payload bytes (centered, [-1, 1]). A real audio decoder
+    replaces exactly this function."""
+    import numpy as np
+
+    buf = np.frombuffer(payload, dtype=np.uint8)
+    if buf.shape[0] < 16:
+        buf = np.zeros(16, dtype=np.uint8)
+    return (buf.astype(np.float64) - 128.0) / 128.0, 8000
+
+
+def _fake_frames(payload: bytes):
+    """DECODE STUB (deterministic fake): a frame stack of
+    ``_fake_pixels`` rolled per frame, one frame per fake second (at
+    most 16), at 1 fps. A real demuxer + codec replaces this."""
+    import numpy as np
+
+    img, _w, _h = _fake_pixels(payload)
+    n = max(1, min(16, _fake_duration_ms(payload) // 1000))
+    return np.stack([np.roll(img, 7 * i, axis=1) for i in range(n)]), 1.0
+
+
+# decoder facet → (its codecs' typed error, the deterministic fake, the
+# NotImplementedError message when fake=False)
+_STUB_POLICY = {
+    "pixels": (
+        "imagecodec.ImageDecodeError", _fake_pixels,
+        "payload is not a numpy-decodable image (PNG/BMP/baseline JPEG); "
+        "other formats need codec libs not present in this environment — "
+        "pass fake=True for the deterministic fake decoder",
+    ),
+    "samples": (
+        "audiocodec.AudioDecodeError", _fake_samples,
+        "payload is not a stdlib-decodable audio format (WAV/PCM); "
+        "compressed codecs need libs not present in this environment — "
+        "pass fake=True for the deterministic fake decoder",
+    ),
+    "frames": (
+        "videocodec.VideoDecodeError", _fake_frames,
+        "payload is not a numpy-decodable video (Y4M raw, MJPEG in AVI/MKV/MP4); "
+        "compressed containers need codec libs not present in this "
+        "environment — pass fake=True for the deterministic fake decoder",
+    ),
+}
+
+
+def _decode(rows, facet: str, payload: bytes, fake: bool, **kw) -> tuple:
+    """The decode step behind decode_pixels / decode_samples /
+    decode_frames: the first table row that matches and carries a
+    ``facet`` decoder runs it. Its typed error (a corrupt or
+    unsupported variant), or no such row, falls to the stub policy:
+    ``fake=True`` gives the deterministic fake (decoder 'fake'),
+    ``fake=False`` raises NotImplementedError. UDF closures pass the
+    ``FORMATS`` they captured when the plan was built, so a row edited
+    in the calling process reaches the executors."""
+    raw = payload or b""
+    error, fake_decode, message = _STUB_POLICY[facet]
+    row = decoder_row(raw, facet, rows)
+    if row is not None:
+        try:
+            return getattr(row, facet)(raw, **kw)
+        except load(error):
+            pass  # corrupt or unsupported variant → stub policy below
+    if fake:
+        return (*fake_decode(raw), "fake")
+    raise NotImplementedError(message)
+
+
+def _routes_to(rows, raw: bytes, kind: str, modality: str) -> bool:
+    """The per-UDF kind gate: the payload's magic or the caller's kind
+    tag names ``modality``."""
+    row = match(raw, rows)
+    return modality in (row.kind if row else None, kind)
+
+
 def decode_pixels(payload: bytes, fake: bool = False) -> tuple:
     """bytes → (grayscale uint8 (h, w), width, height, decoder).
 
@@ -586,105 +314,7 @@ def decode_pixels(payload: bytes, fake: bool = False) -> tuple:
     the result names which path ran ('png' | 'bmp' | 'gif' | 'tiff' |
     'jpeg' | 'pbm/pgm/ppm' | 'qoi' | 'ff' | 'ico' | RAW flavor |
     'fake') so downstream rows are never silently fake."""
-    from dedup_spark.functions.imagecodec import (
-        ImageDecodeError,
-        decode_bmp,
-        decode_dds,
-        decode_farbfeld,
-        decode_gif,
-        decode_hdr,
-        decode_ico,
-        decode_png,
-        decode_pnm,
-        decode_qoi,
-        decode_tga,
-        decode_tiff,
-        is_ico,
-    )
-    from dedup_spark.functions.jpegcodec import decode_jpeg
-    from dedup_spark.functions.rawimage import (
-        decode_raw_preview,
-        detect_raw_flavor,
-    )
-
-    raw = payload or b""
-    try:
-        if raw[:8] == b"\x89PNG\r\n\x1a\n":
-            img, w, h = decode_png(raw)
-            return img, w, h, "png"
-        if raw[:2] == b"BM":
-            img, w, h = decode_bmp(raw)
-            return img, w, h, "bmp"
-        if raw[:1] == b"P" and raw[1:2] in b"123456":
-            img, w, h = decode_pnm(raw)
-            token = {b"1": "pbm", b"4": "pbm", b"2": "pgm",
-                     b"5": "pgm", b"3": "ppm", b"6": "ppm"}[raw[1:2]]
-            return img, w, h, token
-        if raw[:4] == b"qoif":
-            img, w, h = decode_qoi(raw)
-            return img, w, h, "qoi"
-        if raw[:8] == b"farbfeld":
-            img, w, h = decode_farbfeld(raw)
-            return img, w, h, "ff"
-        if is_ico(raw):
-            img, w, h = decode_ico(raw)
-            return img, w, h, "ico"
-        if raw[:3] == b"\xff\xd8\xff":
-            img, w, h = decode_jpeg(raw)
-            return img, w, h, "jpeg"
-        if raw[:5] in (b"GIF87", b"GIF89"):
-            img, w, h = decode_gif(raw)
-            return img, w, h, "gif"
-        if raw[:4] in (b"IIRO", b"IIRS", b"II\x55\x00"):
-            # Olympus ORF / Panasonic RW2: TIFF layout, vendor magic —
-            # fingerprint the embedded JPEG preview (the sensor plane
-            # is vendor-opaque), like every RAW-aware tool
-            img, w, h, flavor = decode_raw_preview(raw)
-            return img, w, h, flavor
-        if raw[:4] in (b"II\x2a\x00", b"MM\x00\x2a"):
-            # TIFF magic covers plain TIFF and the TIFF-EP RAW family
-            # (ARW/NEF by Make tag, CR2 by its offset-8 marker)
-            flavor = detect_raw_flavor(raw)
-            if flavor is not None:
-                img, w, h, flavor = decode_raw_preview(raw)
-                return img, w, h, flavor
-            img, w, h = decode_tiff(raw)
-            return img, w, h, "tiff"
-        if raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-            # lossless (VP8L) decodes for real; lossy VP8 raises the
-            # typed error inside and falls to the stub policy below
-            from dedup_spark.functions.webp import decode_webp
-
-            img, w, h = decode_webp(raw)
-            return img, w, h, "webp"
-        if raw[:4] == b"\x76\x2f\x31\x01":
-            from dedup_spark.functions.exr import decode_exr
-
-            img, w, h = decode_exr(raw)
-            return img, w, h, "exr"
-        if raw[:10] == b"#?RADIANCE" or raw[:6] == b"#?RGBE":
-            img, w, h = decode_hdr(raw)
-            return img, w, h, "hdr"
-        if raw[:4] == b"DDS ":
-            img, w, h = decode_dds(raw)
-            return img, w, h, "dds"
-        # TGA last: it has NO magic, so it is attempted only for
-        # payloads that reached this decoder (kind-tagged image or a
-        # sniffed format whose decode fell through) and only when the
-        # strict structural checks accept — same route the reference
-        # takes (extension → image::open, media_dedup.rs:150-177)
-        img, w, h = decode_tga(raw)
-        return img, w, h, "tga"
-    except ImageDecodeError:
-        pass  # corrupt or unsupported variant → stub policy below
-    if fake:
-        img, w, h = _fake_pixels(raw)
-        return img, w, h, "fake"
-    raise NotImplementedError(
-        "payload is not a numpy-decodable image (PNG/BMP/baseline JPEG); "
-        "other formats need codec libs not present in this environment — "
-        "pass fake=True for the deterministic fake decoder"
-    )
+    return _decode(FORMATS, "pixels", payload, fake)
 
 
 def resize_nearest(img, out_w: int, out_h: int):
@@ -711,9 +341,9 @@ def resize_images(assets: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFr
             rows = []
             for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                if detect_kind_from_magic(raw) != "image" and kind != "image":
+                if not _routes_to(FORMATS, raw, kind, "image"):
                     continue
-                img, w, h, _dec = decode_pixels(raw, fake=True)
+                img, w, h, _dec = _decode(FORMATS, "pixels", raw, True)
                 out = resize_nearest(img, out_w, out_h)
                 rows.append(
                     {
@@ -749,7 +379,7 @@ def sample_frames(assets: DataFrame, every_ms: int = 1000, max_frames: int = 64)
             rows = []
             for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                if detect_kind_from_magic(raw) != "video" and kind != "video":
+                if not _routes_to(FORMATS, raw, kind, "video"):
                     continue
                 dur = _fake_duration_ms(raw)
                 n = min(max_frames, max(1, dur // every_ms))
@@ -840,10 +470,10 @@ def image_phash(
             rows = []
             for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                if detect_kind_from_magic(raw) != "image" and kind != "image":
+                if not _routes_to(FORMATS, raw, kind, "image"):
                     continue
                 try:
-                    img, w, h, dec = decode_pixels(raw, fake=fake)
+                    img, w, h, dec = _decode(FORMATS, "pixels", raw, fake)
                 except NotImplementedError:
                     if on_undecodable == "skip":
                         continue
@@ -936,18 +566,6 @@ def image_near_dup_clusters(
     return _signature_near_dup_clusters(image_phash(assets, fake=fake), "phash", cfg)
 
 
-def _fake_samples(payload: bytes):
-    """DECODE STUB (deterministic fake): derive a mono sample stream
-    from the payload bytes (centered, [-1, 1]). A real audio decoder
-    replaces exactly this function."""
-    import numpy as np
-
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    if buf.shape[0] < 16:
-        buf = np.zeros(16, dtype=np.uint8)
-    return (buf.astype(np.float64) - 128.0) / 128.0, 8000
-
-
 def decode_samples(payload: bytes, fake: bool = False) -> tuple:
     """bytes → (mono float64 samples, sample_rate, decoder).
 
@@ -965,151 +583,7 @@ def decode_samples(payload: bytes, fake: bool = False) -> tuple:
     streams selecting constructs outside the subsets) keeps the
     honest-stub policy: ``fake=True`` falls back to the deterministic
     fake (also for corrupt payloads), ``fake=False`` raises."""
-    from dedup_spark.functions.audiocodec import (
-        AudioDecodeError,
-        decode_aiff,
-        decode_au,
-        decode_flac,
-        decode_mka,
-        decode_ogg_flac,
-        decode_wav,
-    )
-    from dedup_spark.functions.mpegaudio import decode_mpeg
-    from dedup_spark.functions.vorbis import decode_vorbis
-
-    raw = payload or b""
-    try:
-        if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-            x, rate = decode_wav(raw)
-            return x, rate, "wav"
-        if raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
-            x, rate = decode_aiff(raw)
-            return x, rate, "aiff"
-        if raw[:4] == b".snd":
-            x, rate = decode_au(raw)
-            return x, rate, "au"
-        if raw[:4] == b"fLaC":
-            x, rate = decode_flac(raw)
-            return x, rate, "flac"
-        if raw[:4] == b"OggS":
-            # dispatch on the BOS packet's codec identification header
-            # (plain bits in every mapped codec): FLAC-in-Ogg reuses
-            # the native FLAC frame decoder; everything else goes to
-            # the Vorbis path, which rejects Opus/Speex/Theora with a
-            # typed error (stub policy preserved)
-            nsegs = raw[26] if len(raw) > 26 else 0
-            if raw[27 + nsegs : 27 + nsegs + 5] == b"\x7fFLAC":
-                x, rate = decode_ogg_flac(raw)
-                return x, rate, "oggflac"
-            x, rate = decode_vorbis(raw)
-            return x, rate, "vorbis"
-        if raw[:4] == b"\x1aE\xdf\xa3":
-            # audio-only Matroska/WebM (.mka, audio .webm): the
-            # carried codec is FLAC / Vorbis / PCM — all decoders this
-            # engine already has. Files with a video track raise (they
-            # are video files; see decode_mka) and keep the video
-            # route's honest-stub policy.
-            x, rate, inner = decode_mka(raw)
-            return x, rate, f"mka{inner}"
-        if raw[:3] == b"ID3" or (
-            len(raw) >= 4 and raw[0] == 0xFF and (raw[1] & 0xE0) == 0xE0
-        ):
-            x, rate, layer = decode_mpeg(raw)
-            return x, rate, f"mp{layer}"
-        if raw[:4] == b"FLV\x01":
-            # audio-only FLV: MP3 and LPCM sound formats decode for
-            # real; video tags present → refuse (same stream-inventory
-            # policy); H.263/VP6/AVC video stays honestly stubbed
-            from dedup_spark.functions.containers import (
-                _FLV_RATES,
-                ContainerParseError,
-                parse_flv_tags,
-            )
-
-            chunks: list[bytes] = []
-            flags = None
-            try:
-                for ttype, _ts, body in parse_flv_tags(raw):
-                    if ttype == 9 and body:
-                        raise AudioDecodeError("FLV has a video tag")
-                    if ttype == 8 and len(body) > 1:
-                        if flags is None:
-                            flags = body[0]
-                        chunks.append(body[1:])
-            except ContainerParseError as exc:
-                raise AudioDecodeError(f"FLV parse: {exc}") from exc
-            if flags is None:
-                raise AudioDecodeError("FLV has no audio tags")
-            fmt = flags >> 4
-            es = b"".join(chunks)
-            if fmt in (2, 14):  # MP3 frames ride verbatim in the tags
-                x, rate, layer = decode_mpeg(es)
-                return x, rate, f"flv-mp{layer}"
-            if fmt == 3 and (flags >> 1) & 1:  # LPCM little-endian 16-bit
-                import numpy as np
-
-                stereo = flags & 1
-                width = 2 * (2 if stereo else 1)
-                s = np.frombuffer(
-                    es[: len(es) - len(es) % width], dtype="<i2"
-                ).astype(np.float64) / 32768.0
-                if stereo:
-                    s = s.reshape(-1, 2).mean(axis=1)
-                if s.size == 0:
-                    raise AudioDecodeError("FLV LPCM decodes to nothing")
-                rate = _FLV_RATES[(flags >> 2) & 3]
-                return np.clip(s, -1.0, 1.0), rate, "flv-pcm"
-            raise AudioDecodeError(f"unsupported FLV sound format {fmt}")
-        if raw[:4] == b"\x00\x00\x01\xba" or _is_mpeg_ts(raw):
-            # audio-only MPEG system streams (MP2 radio/DVB dumps):
-            # same stream-inventory policy as Matroska — a video
-            # stream present means it is a video file, refuse here
-            from dedup_spark.functions.containers import (
-                ContainerParseError,
-                demux_mpeg_ps,
-                demux_mpeg_ts,
-            )
-            from dedup_spark.functions.audiocodec import AudioDecodeError
-
-            try:
-                if raw[:4] == b"\x00\x00\x01\xba":
-                    streams = demux_mpeg_ps(raw)
-                    if any(0xE0 <= s <= 0xEF for s in streams):
-                        raise AudioDecodeError(
-                            "program stream has a video stream")
-                    auds = sorted(s for s in streams if 0xC0 <= s <= 0xDF)
-                    es = streams[auds[0]] if auds else b""
-                    wrapper = "ps"
-                else:
-                    from dedup_spark.functions.containers import (
-                        TS_VIDEO_STREAM_TYPES,
-                    )
-
-                    ts = demux_mpeg_ts(raw)
-                    if any(st in TS_VIDEO_STREAM_TYPES
-                           for st, _ in ts.values()):
-                        raise AudioDecodeError(
-                            "transport stream has a video stream")
-                    auds = sorted(p for p, (st, _) in ts.items()
-                                  if st in (0x03, 0x04))
-                    es = ts[auds[0]][1] if auds else b""
-                    wrapper = "ts"
-            except ContainerParseError as exc:
-                raise AudioDecodeError(f"system-layer demux: {exc}") from exc
-            if not es:
-                raise AudioDecodeError(f"{wrapper}: no MPEG audio stream")
-            x, rate, layer = decode_mpeg(es)
-            return x, rate, f"{wrapper}-mp{layer}"
-    except AudioDecodeError:
-        pass  # corrupt or unsupported variant → stub policy below
-    if fake:
-        x, rate = _fake_samples(raw)
-        return x, rate, "fake"
-    raise NotImplementedError(
-        "payload is not a stdlib-decodable audio format (WAV/PCM); "
-        "compressed codecs need libs not present in this environment — "
-        "pass fake=True for the deterministic fake decoder"
-    )
+    return _decode(FORMATS, "samples", payload, fake)
 
 
 AUDIO_FP_SCHEMA = StructType(
@@ -1141,10 +615,10 @@ def audio_fingerprint(
             rows = []
             for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                if detect_kind_from_magic(raw) != "audio" and kind != "audio":
+                if not _routes_to(FORMATS, raw, kind, "audio"):
                     continue
                 try:
-                    x, rate, dec = decode_samples(raw, fake=fake)
+                    x, rate, dec = _decode(FORMATS, "samples", raw, fake)
                 except NotImplementedError:
                     if on_undecodable == "skip":
                         continue
@@ -1272,17 +746,12 @@ def media_near_dup_clusters(
     # reference's ffprobe routing by STREAM inventory, not extension.
     # Cost: one asset_id anti-join against the already-cut video
     # signature frame — the same shape as the final leftover join. The
-    # JVM-side magic filter keeps the retry to the four container
-    # families that CAN be audio-only (Matroska, MPEG-PS, MPEG-TS,
-    # FLV):
+    # JVM-side magic filter keeps the retry to the table's video rows
+    # that carry an audio decoder (Matroska, MPEG-PS, MPEG-TS, FLV):
     # failed Y4M/AVI/MP4/H.264 payloads never ship through the extra
     # Arrow stage at all.
-    _hx4 = F.lower(F.hex(F.substring(F.col("payload"), 1, 4)))
-    _audio_capable = _hx4.isin(
-        "1a45dfa3", "000001ba", "464c5601"
-    ) | _mpeg_ts_probe_col(F.col("payload"))
     video_leftover = (
-        tagged.filter((F.col("_m") == "video") & _audio_capable)
+        tagged.filter((F.col("_m") == "video") & retry_col(F.col("payload")))
         .join(video_sigs.select("asset_id"), "asset_id", "left_anti")
         .withColumn("kind", F.lit("audio"))
     )
@@ -1353,16 +822,16 @@ def media_keeper_meta(assets: DataFrame, fake: bool = False) -> DataFrame:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                fmt = sniff_media_format(raw)
-                kind = detect_kind_from_magic(raw)
+                row = match(raw, FORMATS)
+                fmt, kind = (row.token, row.kind) if row else (None, "blob")
                 w = h = None
                 try:
                     if kind == "image":
-                        _img, w, h, _dec = decode_pixels(raw, fake=fake)
+                        _img, w, h, _dec = _decode(FORMATS, "pixels", raw, fake)
                     elif kind == "video":
                         try:
-                            frames, _fps, _dec = decode_frames(
-                                raw, fake=fake, max_frames=1
+                            frames, _fps, _dec = _decode(
+                                FORMATS, "frames", raw, fake, max_frames=1
                             )
                             h, w = int(frames.shape[1]), int(frames.shape[2])
                         except Exception:
@@ -1372,9 +841,9 @@ def media_keeper_meta(assets: DataFrame, fake: bool = False) -> DataFrame:
                             # keeps the format token instead of the
                             # failed-extraction None. Anything else
                             # re-raises into the outer None path.
-                            decode_samples(raw, fake=fake)
+                            _decode(FORMATS, "samples", raw, fake)
                     elif kind == "audio":
-                        decode_samples(raw, fake=fake)  # w/h stay NULL
+                        _decode(FORMATS, "samples", raw, fake)  # w/h stay NULL
                     else:
                         fmt = None  # blob: no media metadata
                 except Exception:  # noqa: BLE001 — any decode failure
@@ -1611,99 +1080,7 @@ def decode_frames(
     honest-stub policy: ``fake=True`` falls back to a deterministic
     fake frame stack (byte-derived pixels, length-derived duration),
     ``fake=False`` raises."""
-    import numpy as np
-
-    from dedup_spark.functions.containers import _qt_atom_led
-    from dedup_spark.functions.mpeg1video import decode_mpeg_video
-    from dedup_spark.functions.videocodec import (
-        VideoDecodeError,
-        decode_avi_mjpeg,
-        decode_mkv_mjpeg,
-        decode_mp4_mjpeg,
-        decode_y4m,
-    )
-
-    raw = payload or b""
-    try:
-        if raw[:9] == b"YUV4MPEG2":
-            frames, fps = decode_y4m(raw)
-            return frames, fps, "y4m"
-        if raw[:4] == b"\x00\x00\x01\xb3":
-            # variant detected from the bitstream: 'm1v' or 'm2v'
-            return decode_mpeg_video(raw, max_frames=max_frames)
-        if raw[:4] == b"\x00\x00\x01\xba" or _is_mpeg_ts(raw):
-            # MPEG system layers (.mpg program stream / .ts transport
-            # stream): structural demux → the same MPEG-1/2 video ES
-            # decoder; audio-only system streams raise here and take
-            # the orchestrator's audio retry (like audio-only MKV)
-            from dedup_spark.functions.containers import (
-                ContainerParseError,
-                demux_mpeg_ps,
-                demux_mpeg_ts,
-            )
-
-            try:
-                if raw[:4] == b"\x00\x00\x01\xba":
-                    streams = demux_mpeg_ps(raw)
-                    vids = sorted(s for s in streams if 0xE0 <= s <= 0xEF)
-                    es = streams[vids[0]] if vids else None
-                    wrapper = "ps"
-                else:
-                    from dedup_spark.functions.containers import (
-                        TS_VIDEO_STREAM_TYPES,
-                    )
-
-                    ts = demux_mpeg_ts(raw)
-                    vids = sorted(p for p, (st, _) in ts.items()
-                                  if st in (0x01, 0x02))
-                    if not vids and any(
-                        st in TS_VIDEO_STREAM_TYPES for st, _ in ts.values()
-                    ):
-                        # H.264/HEVC/... video present but outside the
-                        # decodable subset: this is a VIDEO file — do
-                        # NOT let the audio retry claim it by soundtrack
-                        raise VideoDecodeError(
-                            "transport stream video codec outside the "
-                            "MPEG-1/2 subset")
-                    es = ts[vids[0]][1] if vids else None
-                    wrapper = "ts"
-            except ContainerParseError as exc:
-                raise VideoDecodeError(f"system-layer demux: {exc}") from exc
-            if es is None:
-                raise VideoDecodeError(
-                    f"{wrapper}: no MPEG video stream (audio-only?)")
-            j = es.find(b"\x00\x00\x01\xb3")
-            if j < 0:
-                raise VideoDecodeError(f"{wrapper}: video ES lacks a "
-                                       "sequence header")
-            frames, fps, tag = decode_mpeg_video(es[j:], max_frames=max_frames)
-            return frames, fps, f"{wrapper}-{tag}"
-        if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-            frames, fps = decode_avi_mjpeg(raw, max_frames=max_frames)
-            return frames, fps, "avi-mjpeg"
-        if raw[:4] == b"\x1a\x45\xdf\xa3":
-            frames, fps = decode_mkv_mjpeg(raw, max_frames=max_frames)
-            return frames, fps, "mkv-mjpeg"
-        if len(raw) >= 8 and raw[4:8] == b"ftyp":
-            frames, fps = decode_mp4_mjpeg(raw, max_frames=max_frames)
-            return frames, fps, "mp4-mjpeg"
-        if _qt_atom_led(raw):  # legacy pre-ftyp QuickTime .mov
-            frames, fps = decode_mp4_mjpeg(raw, max_frames=max_frames)
-            return frames, fps, "mov-mjpeg"
-    except VideoDecodeError:
-        pass  # corrupt or unsupported variant → stub policy below
-    if fake:
-        img, w, h = _fake_pixels(raw)
-        n = max(1, min(16, _fake_duration_ms(raw) // 1000))
-        frames = np.stack(
-            [np.roll(img, 7 * i, axis=1) for i in range(n)]
-        )
-        return frames, 1.0, "fake"
-    raise NotImplementedError(
-        "payload is not a numpy-decodable video (Y4M raw, MJPEG in AVI/MKV/MP4); "
-        "compressed containers need codec libs not present in this "
-        "environment — pass fake=True for the deterministic fake decoder"
-    )
+    return _decode(FORMATS, "frames", payload, fake, max_frames=max_frames)
 
 
 VIDEO_FP_SCHEMA = StructType(
@@ -1744,11 +1121,11 @@ def video_fingerprint(
             rows = []
             for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                if detect_kind_from_magic(raw) != "video" and kind != "video":
+                if not _routes_to(FORMATS, raw, kind, "video"):
                     continue
                 try:
-                    frames, _fps, dec = decode_frames(
-                        raw, fake=fake, max_frames=max_frames
+                    frames, _fps, dec = _decode(
+                        FORMATS, "frames", raw, fake, max_frames=max_frames
                     )
                 except NotImplementedError:
                     if on_undecodable == "skip":
@@ -1941,7 +1318,7 @@ def documents_as_assets(spark, sf_dir: str) -> DataFrame:
     (cycles PNG/JPEG/MP3/MKV by doc_id) so kind detection and decode
     plumbing are exercised without real media files."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # pinned 4-magic cycle (NOT list(_MAGIC_KINDS): the detection table
+    # pinned 4-magic cycle (NOT derived from the format table: the table
     # can grow without changing fixture payloads or the asset_meta oracle)
     magics = ["89504e47", "ffd8ffe0", "49443303", "1a45dfa3"]
     header = F.unhex(

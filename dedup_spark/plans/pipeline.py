@@ -172,9 +172,7 @@ class DedupPipeline:
             w = Window.partitionBy("hash")
             with_rep = sigs.withColumn("exact_rep", F.min("file_id").over(w))
         comp = connected_components(
-            verified_pairs,
-            max_iterations=self.config.cc_max_iterations,
-            config=self.config,
+            verified_pairs, config=self.config
         ).withColumnsRenamed({"node": "exact_rep", "cluster_id": "fuzzy_label"})
         # comp scales with the near-dup population (corpus-order on a
         # dup-heavy corpus) — never let a small-size misestimate

@@ -569,6 +569,17 @@ def test_decode_samples_routes_ogg_flac(spark):
 # ------------------------------------------------- Matroska audio (.mka)
 
 
+def test_block_frames_one_frame_lace_has_no_sizes():
+    """A laced block whose lace count is 0 holds one frame and no lace
+    sizes, under every lacing (RFC 9559 §10): EBML must not read a
+    size vint there."""
+    from dedup_spark.functions.audiocodec import _block_frames
+
+    for flags in (0x02, 0x04, 0x06):  # Xiph, fixed, EBML
+        block = bytes([0x00, 0x00, flags, 0x00]) + bytes(range(32))
+        assert _block_frames(block, 0, len(block)) == [(4, 36)], flags
+
+
 def test_mka_round_trips_all_codecs_and_lacings():
     """FLAC-in-Matroska must decode bit-identical to native FLAC
     (frames travel verbatim), Vorbis-in-Matroska bit-identical to the

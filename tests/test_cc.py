@@ -42,6 +42,14 @@ def test_long_chain_converges(spark, cfg):
     assert len(got) == n + 1
 
 
+def test_star_loop_raises_when_not_converged(spark):
+    """cc_max_iterations bounds the star loop, and running out of
+    rounds raises instead of returning unconverged labels."""
+    cfg = DedupConfig(cc_smallgraph_threshold=0, cc_max_iterations=1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _labels(spark, [(i, i + 1) for i in range(64)], cfg)
+
+
 @pytest.mark.parametrize("cfg", CONFIGS)
 def test_duplicate_and_reversed_edges(spark, cfg):
     got = _labels(spark, [(2, 1), (1, 2), (2, 3), (3, 2)], cfg)

@@ -339,7 +339,7 @@ def test_media_keep_selection_end_to_end(spark):
 def test_sniff_never_crashes_and_agrees_with_kind():
     """Property: sniff_media_format is total over arbitrary bytes and
     its token family always agrees with detect_kind_from_magic."""
-    from hypothesis import given, settings
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
 
     from dedup_spark.operators.multimodal import detect_kind_from_magic
@@ -348,6 +348,25 @@ def test_sniff_never_crashes_and_agrees_with_kind():
                "arw", "nef", "cr2", "orf", "rw2"}
     audio_t = {"wav", "flac", "ogg", "mp1", "mp2", "mp3", "aac"}
     video_t = {"y4m", "mkv", "avi", "mp4", "mov", "mpg"}
+
+    # inputs where the hand-written sniffers used to disagree
+    disputed = (
+        b"BM\x36\x00\x00\x00\x01\x00\x00\x00" + bytes(8),
+        b"GIF8 text, not a gif",
+        b"GIF87a\x04\x00\x04\x00\x00\x00\x00",
+        b"YUV4 text, not a stream",
+        b"\x00\x00\x01\x00\x01\x00" + bytes(20),
+        b"P5\nxyz not a header",
+        b"\xff\xea\x90\x00" + bytes(16),
+        b"\xff\xf1\x50\x80" + bytes(16),
+        b"\x30\x26\xb2\x75 only the 4-byte prefix",
+        b"\x89PNG not the 8-byte signature",
+        b"\x89PNGftyp!!",
+        b"ID3\x04\x00 v2.4 tag",
+        b"\xff\xd8\xff\xe0JFIF",
+        b"\x00\x00\x00\x08ftyp",
+        b"RIFFftyp" + bytes(8),
+    )
 
     @settings(max_examples=300, deadline=None)
     @given(st.binary(min_size=0, max_size=64))
@@ -364,6 +383,8 @@ def test_sniff_never_crashes_and_agrees_with_kind():
         # path (no real AAC decode); mp4/mov: kind sniffer accepts
         # layouts ≥8 bytes while the format sniffer wants ≥12
 
+    for raw in disputed:
+        check = example(raw)(check)
     check()
 
 

@@ -187,7 +187,11 @@ def test_kind_column_matches_python(spark):
     import numpy as np
 
     from dedup_spark.functions.audiocodec import encode_wav_pcm16
-    from dedup_spark.functions.imagecodec import encode_bmp_gray8, encode_png_gray8
+    from dedup_spark.functions.imagecodec import (
+        encode_bmp_gray8,
+        encode_ico_gray8,
+        encode_png_gray8,
+    )
     from dedup_spark.functions.jpegcodec import encode_jpeg_gray8
     from dedup_spark.functions.videocodec import encode_avi_mjpeg, encode_y4m
     from dedup_spark.operators.multimodal import (
@@ -270,6 +274,23 @@ def test_kind_column_matches_python(spark):
         b"\x30\x26\xb2\x74 near-miss guid",  # not the ASF guid -> blob
         (b"\x47" + bytes(203)) * 3,  # 204-byte DVB TS -> video
         (b"\x47" + bytes(195)) * 3,  # 196-byte stride: neither form -> blob
+        # inputs where the hand-written sniffers used to disagree; each
+        # now follows the one table row (choices listed in CHANGES.md)
+        b"BM\x36\x00\x00\x00\x01\x00\x00\x00" + bytes(8),  # BMP reserved bytes nonzero -> blob
+        b"GIF8 text, not a gif",  # GIF needs GIF87a/GIF89a -> blob
+        b"GIF87a\x04\x00\x04\x00\x00\x00\x00",  # GIF87a -> image
+        b"YUV4 text, not a stream",  # Y4M needs YUV4MPEG2 -> blob
+        b"YUV4MPEG2 W8 H8 F25:1\n",  # -> video
+        encode_ico_gray8(img, png_entry=False),  # ICO passing is_ico too -> image
+        b"P5\nxyz not a header",  # PNM whitespace then no digit -> blob
+        b"\xff\xea\x90\x00" + bytes(16),  # MPEG sync, reserved version -> blob
+        b"\xff\xf1\x50\x80" + bytes(16),  # ADTS: token aac, routed blob
+        b"\x30\x26\xb2\x75 only the 4-byte prefix",  # ASF needs the full GUID -> blob
+        b"\x89PNG not the 8-byte signature",  # PNG 4-byte magic -> image
+        b"ID3\x04\x00 v2.4 tag",  # any ID3v2 version -> audio
+        b"\xff\xd8\xff\xe0JFIF",  # 8 bytes, under the old 12-byte format floor
+        b"\x00\x00\x00\x08ftyp",  # 8-byte ISO-BMFF -> video
+        b"RIFFftyp" + bytes(8),  # unknown RIFF form, ftyp at offset 4 -> video
     ]
     rows = [(i, bytearray(p)) for i, p in enumerate(payloads)]
     df = spark.createDataFrame(rows, "i long, payload binary")
@@ -279,6 +300,56 @@ def test_kind_column_matches_python(spark):
     }
     for i, p in enumerate(payloads):
         assert got[i] == detect_kind_from_magic(p), (i, p[:12], got[i])
+
+
+def test_format_row_decoder_is_the_only_dispatch(spark):
+    """Swapping one format-table row's decoder (in the test process) routes
+    that format through the swap inside media_near_dup_clusters: no
+    second dispatch chain remains. Every other row, and every cluster,
+    is unchanged."""
+    from unittest import mock
+
+    import numpy as np
+
+    from dedup_spark.functions.audiocodec import encode_wav_pcm16
+    from dedup_spark.functions.formats import FORMATS
+    from dedup_spark.functions.imagecodec import encode_png_gray8, encode_qoi_gray8
+    from dedup_spark.operators.multimodal import media_near_dup_clusters
+
+    yy, xx = np.mgrid[0:32, 0:32]
+    img = np.minimum(yy * 5 + xx * 3, 255).astype(np.uint8)
+    x = np.sin(np.linspace(0, 300, 8000)) * 0.5
+    rows = [
+        (1, "blob", bytearray(encode_png_gray8(img)), None),
+        (2, "blob", bytearray(encode_png_gray8(img[:, ::-1])), None),
+        (3, "blob", bytearray(encode_qoi_gray8(img)), None),
+        (4, "blob", bytearray(encode_wav_pcm16(x, 8000)), None),
+        (5, "blob", bytearray(b"plain text blob " * 30), None),
+    ]
+    df = spark.createDataFrame(rows, ASSET_SCHEMA)
+
+    def run():
+        return {
+            r["asset_id"]: (r["decoder"], r["cluster_id"], r["cluster_size"])
+            for r in media_near_dup_clusters(df).collect()
+        }
+
+    png = next(r for r in FORMATS if r.token == "png")
+    real = png.pixels
+
+    def swapped(raw):
+        img_, w, h, _dec = real(raw)
+        return img_, w, h, "png-swapped"
+
+    base = run()
+    with mock.patch.object(png, "pixels", swapped):
+        got = run()
+    assert {a: d for a, (d, _c, _n) in got.items()} == {
+        1: "png-swapped", 2: "png-swapped", 3: "qoi", 4: "wav", 5: "bytes"
+    }
+    assert {a: v[1:] for a, v in got.items()} == {a: v[1:] for a, v in base.items()}
+    assert {a: v[0] for a, v in base.items()}[1] == "png"
+    assert got[1][1] == got[3][1] != got[2][1]  # PNG twin + QOI merge
 
 
 def test_media_orchestrator_decodes_once_per_modality(spark):
