@@ -587,7 +587,17 @@ def decode_ogg_flac(payload: bytes) -> tuple[np.ndarray, int]:
     Decode = reassemble the native stream (STREAMINFO forced to
     last-metadata since the trailing header packets are dropped) and
     hand it to ``decode_flac`` — byte-identical frame semantics,
-    zero new tables. Any parse failure raises AudioDecodeError."""
+    zero new tables. Any parse failure raises AudioDecodeError
+    (airtight stub-policy contract, like decode_flac)."""
+    try:
+        return _decode_ogg_flac(payload)
+    except AudioDecodeError:
+        raise
+    except (ValueError, IndexError, OverflowError, MemoryError) as exc:
+        raise AudioDecodeError(f"corrupt Ogg-FLAC: {exc!r}") from exc
+
+
+def _decode_ogg_flac(payload: bytes) -> tuple[np.ndarray, int]:
     from dedup_spark.functions.vorbis import _ogg_packets
 
     packets, _granule = _ogg_packets(payload or b"")

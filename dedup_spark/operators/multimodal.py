@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -488,13 +488,23 @@ def image_phash(
 
 
 def _signature_near_dup_clusters(
-    sigs: DataFrame, sig_col: str, cfg, precut: bool = False
+    sigs: DataFrame, sig_col: str, cfg, precut: bool = False,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Shared assembly for 64-bit perceptual signatures (image pHash,
-    audio fingerprint): Hamming block-pair probing join → connected
-    components → min-id cluster labels, singletons keeping their own
-    id. Identical covering-design recall and bucket caps as the text
-    SimHash path — one scale machinery for every modality.
+    audio fingerprint, video frame-hash majority): Hamming block-pair
+    probing join → connected components → min-id cluster labels,
+    singletons keeping their own id. Identical covering-design recall
+    and bucket caps as the text SimHash path — one scale machinery for
+    every modality.
+
+    ``by`` columns gate the graph: the exact collapse, the block-pair
+    buckets (and so the ``band_bucket_cap`` count) and the cluster-size
+    window are all keyed by them, so rows that differ on ``by`` never
+    pair. The media orchestrator passes ``("modality",)`` and runs ONE
+    join and ONE connected-components pass over every modality's
+    signatures; each component's minimum id is the same as when each
+    modality runs alone, because no edge crosses a modality.
 
     ``precut=True`` promises the caller already lineage_cut ``sigs``
     (so an orchestrator that also consumes the frame elsewhere shares
@@ -522,9 +532,10 @@ def _signature_near_dup_clusters(
     # bounded by the number of DISTINCT signatures. Found by
     # scripts/media_scale_probe.py's mass-duplicate variant (recall
     # 1/3 at 60k assets without the collapse; 1.0 with it).
-    reps = sigs.groupBy(sig_col).agg(F.min("asset_id").alias("asset_id"))
+    keys = [*by, sig_col]
+    reps = sigs.groupBy(*keys).agg(F.min("asset_id").alias("asset_id"))
     pairs = simhash_candidate_pairs(
-        reps.withColumnRenamed(sig_col, "simhash"), cfg, id_col="asset_id"
+        reps.withColumnRenamed(sig_col, "simhash"), cfg, id_col="asset_id", by=by
     ).select("id_a", "id_b")
     comp = connected_components(pairs, config=cfg)
     # both attach joins have corpus-sized build candidates at 10^12
@@ -541,13 +552,14 @@ def _signature_near_dup_clusters(
             "left",
         )
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("_rep_id")))
-        .select(sig_col, "cluster_id")
+        .select(*keys, "cluster_id")
     )
-    labeled = sigs.join(rep_label.hint("merge"), sig_col, "left").withColumn(
+    labeled = sigs.join(rep_label.hint("merge"), keys, "left").withColumn(
         "cluster_id", F.coalesce("cluster_id", F.col("asset_id"))
     )
     return labeled.withColumn(
-        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
+        "cluster_size",
+        F.count(F.lit(1)).over(Window.partitionBy(*by, "cluster_id")),
     )
 
 
@@ -670,7 +682,10 @@ def media_near_dup_clusters(
     ``decoder`` says which real decoder fingerprinted the row ('bytes'
     for the byte-shingle fallback — nothing is ever silently fake).
     Cluster ids are namespaced by modality, so cross-kind pairs can
-    never merge, exactly the reference's gate.
+    never merge, exactly the reference's gate. The image, audio and
+    video signatures share ONE Hamming join and ONE connected-components
+    pass, with the modality in every bucket key (see
+    ``_signature_near_dup_clusters``).
 
     ``with_meta=True`` additionally carries the decoded ``width`` /
     ``height`` captured for free during the fingerprint pass (NULL for
@@ -707,33 +722,42 @@ def media_near_dup_clusters(
     null_long = F.lit(None).cast("long")
     meta_cols = ("width", "height") if with_meta else ()
 
-    def labeled(df: DataFrame, modality: str) -> DataFrame:
+    def with_meta_cols(df: DataFrame) -> tuple:
+        return tuple(
+            F.col(c) if c in df.columns else null_long.alias(c) for c in meta_cols
+        )
+
+    def labeled(df: DataFrame, modality: Column) -> DataFrame:
         return df.select(
             "asset_id",
-            F.lit(modality).alias("modality"),
+            modality.alias("modality"),
             F.col("decoder"),
-            F.concat(F.lit(modality + ":"), F.col("cluster_id").cast("string")).alias(
+            F.concat(modality, F.lit(":"), F.col("cluster_id").cast("string")).alias(
                 "cluster_id"
             ),
             "cluster_size",
-            *(
-                (F.col(c) if c in df.columns else null_long.alias(c))
-                for c in meta_cols
-            ),
+            *with_meta_cols(df),
         )
 
-    # each modality's decode+fingerprint mapInPandas frame feeds BOTH
-    # the clustering branch and the leftover anti-join — cut it ONCE
-    # here so both consumers share a single materialization (the cut
-    # inside _signature_near_dup_clusters is skipped via precut=True;
-    # without this the ~100 ms/asset JPEG decode would run twice)
-    drop_meta = () if with_meta else ("width", "height")
-    video_sigs = lineage_cut(
-        video_fingerprint(
-            tagged.filter(F.col("_m") == "video"), fake=fake, on_undecodable="skip"
+    def signatures(df: DataFrame, modality: str, sig_col: str) -> DataFrame:
+        return df.select(
+            "asset_id",
+            F.lit(modality).alias("modality"),
+            F.col(sig_col).alias("sig"),
+            "decoder",
+            *with_meta_cols(df),
         )
-        .withColumnRenamed("vfp", "sig")
-        .drop("n_frames_sampled", *drop_meta),
+
+    # the video signature frame feeds the audio retry's anti-join AND
+    # the union below — cut it so both share one materialization
+    video_sigs = lineage_cut(
+        signatures(
+            video_fingerprint(
+                tagged.filter(F.col("_m") == "video"), fake=fake, on_undecodable="skip"
+            ),
+            "video",
+            "vfp",
+        ),
         cfg,
         eager=False,
     )
@@ -755,48 +779,40 @@ def media_near_dup_clusters(
         .join(video_sigs.select("asset_id"), "asset_id", "left_anti")
         .withColumn("kind", F.lit("audio"))
     )
-    sigs = {
-        "image": lineage_cut(
-            image_phash(
-                tagged.filter(F.col("_m") == "image"), fake, on_undecodable="skip"
-            )
-            .withColumnRenamed("phash", "sig")
-            .drop(*drop_meta),
-            cfg,
-            eager=False,
-        ),
-        "audio": lineage_cut(
-            audio_fingerprint(
-                tagged.filter(F.col("_m") == "audio").unionByName(video_leftover),
-                fake,
-                on_undecodable="skip",
-            ).withColumnRenamed("afp", "sig"),
-            cfg,
-            eager=False,
-        ),
-        "video": video_sigs,
-    }
-    parts = [
-        labeled(_signature_near_dup_clusters(s, "sig", cfg, precut=True), modality)
-        for modality, s in sigs.items()
-    ]
-
-    fingerprinted = sigs["image"].select("asset_id")
-    for s in (sigs["audio"], sigs["video"]):
-        fingerprinted = fingerprinted.unionByName(s.select("asset_id"))
-    leftover = tagged.join(fingerprinted, "asset_id", "left_anti")
-    parts.append(
-        labeled(
-            binary_near_dup_clusters(leftover, cfg).withColumn(
-                "decoder", F.lit("bytes")
-            ),
-            "blob",
-        )
+    image_sigs = signatures(
+        image_phash(tagged.filter(F.col("_m") == "image"), fake, on_undecodable="skip"),
+        "image",
+        "phash",
     )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    audio_sigs = signatures(
+        audio_fingerprint(
+            tagged.filter(F.col("_m") == "audio").unionByName(video_leftover),
+            fake,
+            on_undecodable="skip",
+        ),
+        "audio",
+        "afp",
+    )
+    # every modality's signatures in ONE frame, tagged by modality: one
+    # exact collapse, one Hamming join and one connected-components pass
+    # with the modality in every key — the reference's same-kind gate
+    # without a pipeline per kind. The frame feeds BOTH the clustering
+    # and the leftover anti-join, so it is cut once here (the cut inside
+    # _signature_near_dup_clusters is skipped via precut=True; without
+    # it the ~100 ms/asset JPEG decode would run twice)
+    sigs = lineage_cut(
+        image_sigs.unionByName(audio_sigs).unionByName(video_sigs), cfg, eager=False
+    )
+    clustered = labeled(
+        _signature_near_dup_clusters(sigs, "sig", cfg, precut=True, by=("modality",)),
+        F.col("modality"),
+    )
+    leftover = tagged.join(sigs.select("asset_id"), "asset_id", "left_anti")
+    blobs = labeled(
+        binary_near_dup_clusters(leftover, cfg).withColumn("decoder", F.lit("bytes")),
+        F.lit("blob"),
+    )
+    return clustered.unionByName(blobs)
 
 
 MEDIA_KEEPER_META_SCHEMA = (

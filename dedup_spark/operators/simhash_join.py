@@ -26,7 +26,9 @@ from dedup_spark.config import DedupConfig
 from dedup_spark.functions.signatures import hamming_distance64
 
 
-def simhash_blockpair_keys(df: DataFrame, radius: int, id_col: str = "file_id") -> DataFrame:
+def simhash_blockpair_keys(
+    df: DataFrame, radius: int, id_col: str = "file_id", by: tuple[str, ...] = ()
+) -> DataFrame:
     """Block-PAIR probe keys: split the 64-bit hash into radius+2 blocks
     (8 blocks for radius 6); by pigeonhole at most ``radius`` blocks
     carry an error, so ≥2 blocks are error-free and every true pair
@@ -34,6 +36,7 @@ def simhash_blockpair_keys(df: DataFrame, radius: int, id_col: str = "file_id") 
     block-pair values. One equi-key per pair of blocks — for radius 6:
     28 keys/row of ≥16-bit value space, vs 68 keys/row for the
     one-bit-flip multi-index scheme, with no flip enumeration at all.
+    The ``by`` columns ride along on every key row.
     """
     nblocks = radius + 2
     width = 64 // nblocks  # last block takes the remaining high bits
@@ -58,10 +61,11 @@ def simhash_blockpair_keys(df: DataFrame, radius: int, id_col: str = "file_id") 
     # collisions die in codegen instead of becoming shuffled pairs
     return (
         df.filter(F.col("simhash").isNotNull())
-        .select(id_col, "simhash", F.explode(F.array(*keys)).alias("blk"))
+        .select(id_col, "simhash", *by, F.explode(F.array(*keys)).alias("blk"))
         .select(
             id_col,
             "simhash",
+            *by,
             F.col("blk.block_id").alias("block_id"),
             F.col("blk.block_val").alias("block_val"),
         )
@@ -73,9 +77,17 @@ def simhash_candidate_pairs(
     config: DedupConfig,
     id_col: str = "file_id",
     dedupe: bool = True,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """(id_a, id_b, hamming) pairs within the Hamming radius — distinct
     unless the caller dedupes at a downstream union (``dedupe=False``).
+
+    ``by`` columns join the bucket key, so only rows equal on them can
+    pair, and ``band_bucket_cap`` counts each ``by`` group's members
+    separately — one join over several independent signature sets
+    (the media orchestrator's modalities) gives each set exactly the
+    pairs and cap drops it would get alone. With the default ``()``
+    the bucket key is ``(block_id, block_val)`` alone.
 
     Self-join on block-pair keys (exact recall by pigeonhole — see
     ``simhash_blockpair_keys``); hot key values above
@@ -104,12 +116,15 @@ def simhash_candidate_pairs(
     bit-identical pair set.
     """
     keys = simhash_blockpair_keys(
-        sig_df.select(F.col(id_col), F.col("simhash")), config.simhash_radius, id_col
+        sig_df.select(F.col(id_col), F.col("simhash"), *by),
+        config.simhash_radius,
+        id_col,
+        by,
     )
     # each id appears at most once per (block_id, block_val) bucket, so
     # collect_list is safe (and cheaper than collect_set); buckets above
     # the frequency cap are dropped — counted by skew_metrics upstream
-    buckets = keys.groupBy("block_id", "block_val").agg(
+    buckets = keys.groupBy(*by, "block_id", "block_val").agg(
         F.collect_list(
             F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh"))
         ).alias("members")

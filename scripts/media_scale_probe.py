@@ -6,8 +6,9 @@ carriers of one source signal (images as PNG + lossless WebP + QOI;
 audio as WAV + FLAC-in-Matroska + AU, the middle carrier routed
 through the orchestrator's video→audio retry) plus unique
 singletons, then runs the full
-`media_near_dup_clusters` pipeline (real decode → per-modality
-perceptual signature → Hamming block-pair join → CC) and reports
+`media_near_dup_clusters` pipeline (real decode → each modality's
+perceptual signature → one Hamming block-pair join and one CC over
+all modalities, gated by modality in the bucket key) and reports
 
 - wall seconds and assets/sec at each requested parallelism level,
 - planted within-group pair recall (every 3-carrier group must land

@@ -531,6 +531,60 @@ def test_ogg_flac_rejects_corrupt_streams():
         decode_ogg_flac(bytes(bad_major))
 
 
+def test_ogg_flac_inner_index_error_reroutes_to_blob(spark):
+    """decode_ogg_flac turns an untyped failure of its inner helpers
+    (here a patched ``_ogg_packets`` raising IndexError) into
+    AudioDecodeError, like decode_flac and decode_mka. So the asset
+    takes the stub policy: the orchestrator reroutes it to the
+    byte-shingle blob path instead of failing the job."""
+    from unittest import mock
+
+    from dedup_spark.functions import vorbis
+    from dedup_spark.functions.audiocodec import (
+        decode_ogg_flac,
+        encode_ogg_flac_pcm16,
+        encode_wav_pcm16,
+    )
+    from dedup_spark.functions.formats import FORMATS
+    from dedup_spark.operators.multimodal import (
+        ASSET_SCHEMA,
+        decode_samples,
+        media_near_dup_clusters,
+    )
+
+    x = _colored(13)[:RATE]
+    blob = encode_ogg_flac_pcm16(x, RATE)
+    with mock.patch.object(vorbis, "_ogg_packets", side_effect=IndexError("boom")):
+        with pytest.raises(AudioDecodeError, match="IndexError"):
+            decode_ogg_flac(blob)
+        with pytest.raises(NotImplementedError):
+            decode_samples(blob, fake=False)
+
+    # the executors run the Ogg row's decoder: patch the helper there
+    ogg = next(r for r in FORMATS if r.token == "ogg")
+    real = ogg.samples
+
+    def broken_inner(raw):
+        from unittest import mock as executor_mock
+
+        from dedup_spark.functions import vorbis as executor_vorbis
+
+        with executor_mock.patch.object(
+            executor_vorbis, "_ogg_packets", side_effect=IndexError("boom")
+        ):
+            return real(raw)
+
+    rows = [
+        (1, "blob", encode_wav_pcm16(x, RATE), None),
+        (2, "blob", blob, None),
+    ]
+    df = spark.createDataFrame(rows, ASSET_SCHEMA)
+    with mock.patch.object(ogg, "samples", broken_inner):
+        out = {r["asset_id"]: r for r in media_near_dup_clusters(df).collect()}
+    assert (out[1]["modality"], out[1]["decoder"]) == ("audio", "wav")
+    assert (out[2]["modality"], out[2]["decoder"]) == ("blob", "bytes")
+
+
 def test_decode_samples_routes_ogg_flac(spark):
     """Routing: OggS + FLAC BOS → the native FLAC frame decoder, and
     the WAV/FLAC/Ogg-FLAC re-encodes of one clip land in ONE cluster

@@ -448,6 +448,139 @@ def test_media_near_dup_clusters_routes_by_kind(spark):
     assert out[5]["cluster_size"] == 1
 
 
+def test_one_signature_graph_gates_on_modality(spark):
+    """One Hamming join + CC over several modalities' signatures keyed
+    by ``modality``: cross-modality rows with an equal signature, or
+    one within simhash_radius, never pair, never share a
+    representative and never count in each other's cluster_size."""
+    from dedup_spark.config import DedupConfig
+    from dedup_spark.operators.multimodal import _signature_near_dup_clusters
+    from dedup_spark.operators.simhash_join import simhash_candidate_pairs
+
+    s = 0x5A5A_F0F0_1234_ABCD
+    t = 0x0F0F_3C3C_9876_5432
+    rows = [
+        (1, "image", s),
+        (2, "audio", s),           # same 64-bit signature, other modality
+        (3, "image", t),
+        (4, "audio", t ^ 0b111),   # 3 bits from 3, other modality
+        (5, "image", s ^ 1),       # 1 bit from 1: the image pair
+        (6, "audio", s),           # exact copy of 2: the audio pair
+    ]
+    sigs = spark.createDataFrame(rows, "asset_id long, modality string, sig long")
+    cfg = DedupConfig()
+    out = {
+        r["asset_id"]: (r["modality"], r["cluster_id"], r["cluster_size"])
+        for r in _signature_near_dup_clusters(sigs, "sig", cfg, by=("modality",)).collect()
+    }
+    assert out == {
+        1: ("image", 1, 2), 5: ("image", 1, 2),
+        2: ("audio", 2, 2), 6: ("audio", 2, 2),
+        3: ("image", 3, 1), 4: ("audio", 4, 1),
+    }
+    pairs = simhash_candidate_pairs(
+        sigs.withColumnRenamed("sig", "simhash"), cfg, id_col="asset_id", by=("modality",)
+    ).collect()
+    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 5), (2, 6)}
+
+
+def test_bucket_cap_counts_per_modality(spark):
+    """A block-pair value shared by two modalities, each at or under
+    band_bucket_cap but over it together, still yields each modality's
+    pairs: the cap counts the members of one modality, as it did when
+    every modality ran its own join."""
+    from dedup_spark.config import DedupConfig
+    from dedup_spark.operators.multimodal import _signature_near_dup_clusters
+    from dedup_spark.operators.simhash_join import simhash_candidate_pairs
+
+    s = 0x1111_2222_3333_4444
+    rows = [
+        (1, "image", s), (2, "image", s ^ 1),
+        (3, "audio", s), (4, "audio", s ^ 1),
+    ]
+    sigs = spark.createDataFrame(rows, "asset_id long, modality string, simhash long")
+    cfg = DedupConfig().with_(band_bucket_cap=2)  # 2 per modality, 4 together
+    gated = simhash_candidate_pairs(sigs, cfg, id_col="asset_id", by=("modality",))
+    assert {(r["id_a"], r["id_b"]) for r in gated.collect()} == {(1, 2), (3, 4)}
+    # without the gate every bucket 1-2 and 3-4 share holds 4 > cap
+    # members and is dropped; only the cross-modality twins remain
+    ungated = simhash_candidate_pairs(sigs, cfg, id_col="asset_id")
+    assert {(r["id_a"], r["id_b"]) for r in ungated.collect()} == {(1, 3), (2, 4)}
+    out = {
+        r["asset_id"]: (r["cluster_id"], r["cluster_size"])
+        for r in _signature_near_dup_clusters(
+            sigs.withColumnRenamed("simhash", "sig"), "sig", cfg, by=("modality",)
+        ).collect()
+    }
+    assert out == {1: (1, 2), 2: (1, 2), 3: (3, 2), 4: (3, 2)}
+
+
+def test_media_clusters_match_per_modality_paths(spark):
+    """Regression pin: on a mixed image/audio/video fixture the
+    orchestrator's one cross-modality graph gives each modality the
+    same clusters (ids and sizes) as that modality's own
+    image/audio/video_near_dup_clusters run."""
+    import numpy as np
+
+    from dedup_spark.functions.audiocodec import encode_wav_pcm16
+    from dedup_spark.functions.imagecodec import encode_bmp_gray8, encode_png_gray8
+    from dedup_spark.functions.videocodec import encode_y4m
+    from dedup_spark.operators.multimodal import (
+        audio_near_dup_clusters,
+        image_near_dup_clusters,
+        media_near_dup_clusters,
+        video_near_dup_clusters,
+    )
+
+    rng = np.random.default_rng(11)
+    yy, xx = np.mgrid[0:48, 0:48]
+    images = [
+        np.minimum(yy * 3 + xx * 2, 255).astype(np.uint8),
+        (255 - np.minimum(yy * 2 + xx * 5, 255)).astype(np.uint8),
+        rng.integers(0, 256, (48, 48)).astype(np.uint8),
+    ]
+    clips = [np.sin(np.linspace(0, f, 8000)) * 0.6 for f in (300.0, 1700.0)]
+    clips.append(np.clip(rng.standard_normal(8000) * 0.3, -1, 1))
+
+    def noisy(a, amp):
+        return np.clip(a.astype(np.int16) + rng.integers(-amp, amp + 1, a.shape), 0, 255).astype(np.uint8)
+
+    payloads = [
+        encode_png_gray8(images[0]), encode_bmp_gray8(images[0]),
+        encode_png_gray8(noisy(images[0], 2)),
+        encode_png_gray8(images[1]), encode_bmp_gray8(images[1]),
+        encode_png_gray8(images[2]),
+        encode_wav_pcm16(clips[0], 8000), encode_wav_pcm16(clips[0] * 0.5, 8000),
+        encode_wav_pcm16(clips[1], 8000), encode_wav_pcm16(clips[2], 8000),
+        encode_wav_pcm16(clips[2], 8000),
+    ]
+    # still clips of the images: each video's signature equals (or is
+    # within radius of) an image's, so only the modality gate keeps
+    # them apart
+    for k in range(3):
+        payloads.append(encode_y4m(np.stack([images[k]] * 4)))
+        if k < 2:
+            payloads.append(encode_y4m(np.stack([noisy(images[k], 2)] * 4)))
+    rows = [(i + 1, "blob", bytearray(p), None) for i, p in enumerate(payloads)]
+    df = spark.createDataFrame(rows, ASSET_SCHEMA)
+
+    got = {
+        r["asset_id"]: (r["modality"], r["cluster_id"], r["cluster_size"])
+        for r in media_near_dup_clusters(df).collect()
+    }
+    want = {}
+    for modality, fn in (
+        ("image", image_near_dup_clusters),
+        ("audio", audio_near_dup_clusters),
+        ("video", video_near_dup_clusters),
+    ):
+        for r in fn(df).collect():
+            want[r["asset_id"]] = (modality, f"{modality}:{r['cluster_id']}", r["cluster_size"])
+    assert got == want
+    # the fixture is not trivial: every modality has a merged cluster
+    assert {m for m, _c, n in got.values() if n > 1} == {"image", "audio", "video"}
+
+
 def test_media_orchestrator_routes_round5_codecs(spark):
     """The round-5 decoders ride the SAME orchestrator sniff: Ogg →
     audio/vorbis, MPEG-1/2 elementary streams → video/m1v|m2v, MP3 →
