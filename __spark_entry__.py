@@ -56,9 +56,10 @@ def _q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pipe = DedupPipeline(spark, DedupConfig())
     files = documents_as_code_files(spark, sf_dir)
-    sigs = pipe.signatures(files)
-    reps = pipe.representatives(sigs)
-    verified = pipe.verify(pipe.candidates(reps), reps)
+    _, reps = pipe.collapse(files)
+    verified = pipe.verify(
+        pipe.candidates(reps), reps, content_df=files.select("file_id", "content")
+    )
     contract_region = (F.col("jaccard") >= 0.9) | (
         (F.col("jaccard") >= 0.7) & (F.col("containment") >= 1.0 - 1e-9)
     )

@@ -82,27 +82,14 @@ def run_stages(pipe: DedupPipeline, cfg: DedupConfig, files,
         .collect(),
     )
 
-    # signature kernels (pandas UDFs): force full materialization
-    # (localCheckpoint is eager → belongs inside the timed block)
-    sigs = None
+    # signature kernels (pandas UDFs) + exact collapse: collapse()'s
+    # lineage cuts are eager, so the work lands inside the timed block
+    members = None
     reps = None
 
     def _sigs():
-        nonlocal sigs, reps
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("hash").orderBy("file_id")
-        sigs = (
-            pipe.signatures(files)
-            .drop("content")
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("exact_rep", F.first("file_id").over(w))
-            .localCheckpoint()
-        )
-        reps = (
-            sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep").localCheckpoint()
-        )
-        sigs.count()
+        nonlocal members, reps
+        members, reps = pipe.collapse(files)
 
     timed("signatures", _sigs)
 
@@ -119,9 +106,7 @@ def run_stages(pipe: DedupPipeline, cfg: DedupConfig, files,
         verified = pipe.verify(
             cands, reps, content_df=files.select("file_id", "content")
         )
-        clusters = pipe.cluster(
-            sigs.drop("_rn", "minhash", "simhash", "n_shingles"), verified
-        )
+        clusters = pipe.cluster(members, verified)
         clusters.agg(F.countDistinct("cluster_id"), F.max("cluster_size")).collect()
 
     timed("verify_cc", _verify_cc)

@@ -92,30 +92,17 @@ files = prepare_code_files(synth_code_corpus(spark, n, partitions=64), cfg).loca
 files.count()  # input materialization == the table scan, symmetric across levels
 
 def trial():
-    # minimal action count: ONE checkpoint (the fused hash-window sigs
-    # frame feeds candidates AND cluster assembly; reps is a free
-    # filter of it) — every extra action pays serial Catalyst planning
-    # + scheduling latency that Amdahl charges against E.
-    from pyspark.sql.window import Window
+    # collapse(): the fused hash-window frame feeds candidates AND
+    # cluster assembly, reps is a filter of it — run()'s own two cuts
     stages = {}
     t_all = time.perf_counter()
     t0 = time.perf_counter()
-    w = Window.partitionBy("hash").orderBy("file_id")
-    sigs = (
-        pipe.signatures(files).drop("content")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("exact_rep", F.first("file_id").over(w))
-        .localCheckpoint()
-    )
-    # reps re-materialized: its ~6 consumers must hit small blocks
-    reps = sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep").localCheckpoint()
+    members, reps = pipe.collapse(files)
     stages["signatures"] = time.perf_counter() - t0
     t0 = time.perf_counter()
     cands = pipe.candidates(reps)
     verified = pipe.verify(cands, reps, content_df=files.select("file_id", "content"))
-    clusters = pipe.cluster(
-        sigs.drop("_rn", "minhash", "simhash", "n_shingles"), verified
-    ).localCheckpoint()
+    clusters = pipe.cluster(members, verified).localCheckpoint()
     n_clusters = clusters.agg(F.countDistinct("cluster_id")).first()[0]
     stages["cand_verify_cluster"] = time.perf_counter() - t0
     return time.perf_counter() - t_all, stages, n_clusters, clusters, reps

@@ -55,7 +55,6 @@ class DedupConfig:
     lsh_rows: int = 4                  #   P(candidate) ≥ 0.9998 at J ≥ 0.7, so
     #                                      containment pairs (J≈0.7, LCS≈1.0)
     #                                      still reach verification; r; b*r == minhash_n
-    simhash_bits: int = 64
     simhash_radius: int = 6            # == reference 90% of 64 bits (media_dedup.rs:370-373)
     # NOTE: there is deliberately no block-layout knob — candidate probing
     # derives its radius+2 block-pair split from simhash_radius alone
@@ -63,14 +62,12 @@ class DedupConfig:
 
     # --- candidate generation / skew ---
     band_bucket_cap: int = 512         # drop LSH buckets larger than this (skew guard)
-    salt_buckets: int = 0              # >0: salt band keys into this many sub-buckets
     same_lang_only: bool = False       # F7 gate: only same-lang files compared
     #                                    (reference: similarity across media kinds
     #                                    is 0, src/media_dedup.rs:392-418)
 
     # --- verification ---
     similarity_threshold: float = 0.9  # reference --media-similarity 90/100
-    verify_with_content: bool = True   # token-jaccard / LCS verification pass
     containment_threshold: float = 0.9  # LCS/min-len for containment pairs
 
     # --- clustering ---

@@ -27,7 +27,7 @@ executor-loss resumability — north_rule "resumable from checkpoint").
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dedup_spark.config import DedupConfig
@@ -166,3 +166,27 @@ def connected_components(
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     roots = edges.select(F.col("v").alias("node"), F.col("v").alias("cluster_id")).distinct()
     return members.union(roots).groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
+
+
+def attach_labels(members: DataFrame, comp: DataFrame, by=()) -> DataFrame:
+    """Exact ∪ fuzzy labels: every row of ``members`` (carrying
+    ``exact_rep``, see ``exact.with_exact_rep``) takes the component
+    label of its representative, or the representative itself when it
+    is in no component (singleton or exact-only cluster); then
+    ``cluster_size`` over ``(*by, cluster_id)``.
+
+    ``comp`` is ``connected_components``' (node, cluster_id) output,
+    passed in rather than computed here so each caller keeps its own
+    call site. It scales with the near-dup population (corpus-order on
+    a dup-heavy corpus), so the join is pinned to sort-merge: a small
+    size misestimate must never broadcast it (see
+    ``verify.attach_pair_signatures``)."""
+    comp = comp.withColumnsRenamed({"node": "exact_rep", "cluster_id": "_label"})
+    out = (
+        members.join(comp.hint("merge"), "exact_rep", "left")
+        .withColumn("cluster_id", F.coalesce("_label", "exact_rep"))
+        .drop("_label")
+    )
+    return out.withColumn(
+        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy(*by, "cluster_id"))
+    )

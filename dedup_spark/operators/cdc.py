@@ -41,20 +41,22 @@ def cdc_chunks(
     documents yield no rows. Arrow-batched; one kernel pass per doc."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
         from dedup_spark.functions.shingles import cdc_chunk_hashes
 
         for pdf in batches:
-            ids, idxs, lens, hashes = [], [], [], []
-            for fid, text in zip(pdf[id_col], pdf[content_col]):
-                h, n_tok = cdc_chunk_hashes(text or "", modulus)
-                for k in range(h.shape[0]):
-                    ids.append(int(fid))
-                    idxs.append(k)
-                    lens.append(int(n_tok[k]))
-                    hashes.append(int(h[k].astype("int64")))
+            chunks = [cdc_chunk_hashes(text or "", modulus) for text in pdf[content_col]]
+            counts = np.array([h.shape[0] for h, _ in chunks], dtype=np.int64)
+            # chunk_idx restarts at 0 in every document: a global arange
+            # minus each document's first output row
+            first = np.repeat(np.cumsum(counts) - counts, counts)
             yield pd.DataFrame(
-                {"file_id": ids, "chunk_idx": idxs,
-                 "n_tokens": lens, "chunk_hash": hashes}
+                {"file_id": np.repeat(pdf[id_col].to_numpy(dtype=np.int64), counts),
+                 "chunk_idx": np.arange(counts.sum()) - first,
+                 "n_tokens": np.concatenate([np.empty(0, np.int64), *(n for _, n in chunks)]),
+                 "chunk_hash": np.concatenate(
+                     [np.empty(0, np.uint64), *(h for h, _ in chunks)]).view(np.int64)}
             )
 
     return df.select(id_col, content_col).mapInPandas(_run, CDC_CHUNK_SCHEMA)
@@ -87,4 +89,4 @@ def cdc_near_dup_pairs(
         threshold,
         max_entity_freq=max_doc_freq,
         shared_col="n_shared",
-    ).orderBy("id_a", "id_b")
+    )

@@ -68,6 +68,19 @@ def exact_clusters(
     return out
 
 
+def with_exact_rep(df: DataFrame, keys, id_col: str) -> DataFrame:
+    """The exact collapse shared by the text engine and the media
+    signature graph: ONE shuffle over ``keys`` yields both ``_rn``
+    (1 on the group's min-id row, the representative the fuzzy stage
+    runs on) and ``exact_rep`` (the group's min id, which every member
+    carries to take its representative's label — see
+    ``cc.attach_labels``)."""
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    return df.withColumn("_rn", F.row_number().over(w)).withColumn(
+        "exact_rep", F.first(id_col).over(w)
+    )
+
+
 def exact_cluster_summary(clusters: DataFrame, hash_col: str = "hash") -> DataFrame:
     """A3 summary: one row per duplicate set (hash, size, n_files,
     cluster_id). The reference's DuplicateSet minus the member array.

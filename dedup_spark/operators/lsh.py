@@ -19,8 +19,7 @@ Scale/skew posture:
   a mega-bucket of N identical files never reaches LSH in the first
   place.
 - residual skew in the pair-dedup shuffle is left to AQE skew handling
-  (enabled in session.py); optional ``salt_buckets`` spreads the
-  band-key aggregation's map-side combine.
+  (enabled in session.py).
 """
 
 from __future__ import annotations
@@ -43,18 +42,11 @@ def band_keys(df: DataFrame, config: DedupConfig, id_col: str = "file_id") -> Da
             for i in range(b)
         ]
     )
-    out = (
+    return (
         df.filter(F.col("minhash").isNotNull())
         .select(id_col, F.explode(bands).alias("band"))
         .select(id_col, F.col("band.band_id").alias("band_id"), F.col("band.band_hash").alias("band_hash"))
     )
-    if config.salt_buckets > 0:
-        out = out.repartition(
-            F.col("band_id"),
-            F.col("band_hash"),
-            F.pmod(F.xxhash64(id_col), F.lit(config.salt_buckets)),
-        )
-    return out
 
 
 def pairs_from_keys(

@@ -488,15 +488,16 @@ def image_phash(
 
 
 def _signature_near_dup_clusters(
-    sigs: DataFrame, sig_col: str, cfg, precut: bool = False,
-    by: tuple[str, ...] = (),
+    sigs: DataFrame, sig_col: str, cfg, by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Shared assembly for 64-bit perceptual signatures (image pHash,
-    audio fingerprint, video frame-hash majority): Hamming block-pair
-    probing join → connected components → min-id cluster labels,
-    singletons keeping their own id. Identical covering-design recall
-    and bucket caps as the text SimHash path — one scale machinery for
-    every modality.
+    audio fingerprint, video frame-hash majority): exact collapse →
+    Hamming block-pair probing join over the representatives →
+    connected components → labels, with the collapse
+    (``exact.with_exact_rep``) and the label step (``cc.attach_labels``)
+    shared with the text engine's ``DedupPipeline``. Identical
+    covering-design recall and bucket caps as the text SimHash path —
+    one scale machinery for every modality.
 
     ``by`` columns gate the graph: the exact collapse, the block-pair
     buckets (and so the ``band_bucket_cap`` count) and the cluster-size
@@ -506,61 +507,32 @@ def _signature_near_dup_clusters(
     signatures; each component's minimum id is the same as when each
     modality runs alone, because no edge crosses a modality.
 
-    ``precut=True`` promises the caller already lineage_cut ``sigs``
-    (so an orchestrator that also consumes the frame elsewhere shares
-    ONE materialization of the decode+fingerprint stage)."""
-    from pyspark.sql import Window
-
+    Returns ``sigs``' columns (``by`` and ``sig_col`` first) plus
+    ``cluster_id`` and ``cluster_size``."""
     from dedup_spark.checkpoint import lineage_cut
-    from dedup_spark.operators.cc import connected_components
+    from dedup_spark.operators.cc import attach_labels, connected_components
+    from dedup_spark.operators.exact import with_exact_rep
     from dedup_spark.operators.simhash_join import simhash_candidate_pairs
 
-    # the signature frame feeds BOTH the candidate join and the final
-    # label join — cut lineage so the expensive decode+fingerprint
-    # mapInPandas stage runs once, not once per plan branch
-    if not precut:
-        sigs = lineage_cut(sigs, cfg, eager=False)
-    # exact-signature collapse BEFORE the Hamming join — the same
-    # rep-collapse the text pipeline applies before LSH: a web-scale
-    # media corpus carries one asset verbatim millions of times, and
-    # without this every copy lands in the same block-pair buckets,
-    # the 512-member cap drops the excess (counted, but recall-lossy
-    # for the dropped members). One 16-byte groupBy replaces the mass
-    # with its min-id representative in the join; members rejoin
-    # through the rep's label, so identical-signature clustering is
-    # exact at ANY multiplicity and the Hamming join's bucket load is
-    # bounded by the number of DISTINCT signatures. Found by
-    # scripts/media_scale_probe.py's mass-duplicate variant (recall
-    # 1/3 at 60k assets without the collapse; 1.0 with it).
     keys = [*by, sig_col]
-    reps = sigs.groupBy(*keys).agg(F.min("asset_id").alias("asset_id"))
-    pairs = simhash_candidate_pairs(
-        reps.withColumnRenamed(sig_col, "simhash"), cfg, id_col="asset_id", by=by
-    ).select("id_a", "id_b")
-    comp = connected_components(pairs, config=cfg)
-    # both attach joins have corpus-sized build candidates at 10^12
-    # (reps ≈ distinct signatures, comp ≈ clustered reps) — pin
-    # sort-merge exactly like the text pipeline's label joins, where
-    # AQE's under-threshold size estimate for checkpoint-derived
-    # frames chose a fatal corpus-side broadcast at 1.6M files
-    # (round-4 fix, pipeline.py:182)
-    rep_label = (
-        reps.withColumnRenamed("asset_id", "_rep_id")
-        .join(
-            comp.withColumnRenamed("node", "_rep_id").hint("merge"),
-            "_rep_id",
-            "left",
-        )
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("_rep_id")))
-        .select(*keys, "cluster_id")
-    )
-    labeled = sigs.join(rep_label.hint("merge"), keys, "left").withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col("asset_id"))
-    )
-    return labeled.withColumn(
-        "cluster_size",
-        F.count(F.lit(1)).over(Window.partitionBy(*by, "cluster_id")),
-    )
+    # exact-signature collapse BEFORE the Hamming join — the same
+    # min-id collapse the text pipeline applies before LSH: a web-scale
+    # media corpus carries one asset verbatim millions of times, and
+    # without it every copy lands in the same block-pair buckets, where
+    # the 512-member cap drops the excess (counted, but recall-lossy).
+    # Members take their representative's label, so identical-signature
+    # clustering is exact at ANY multiplicity and the join's bucket
+    # load is bounded by the number of DISTINCT signatures (found by
+    # scripts/media_scale_probe.py's mass-duplicate variant: recall 1/3
+    # at 60k assets without the collapse; 1.0 with it). The collapsed
+    # frame feeds both the join and the labels — cut it, so the
+    # decode+fingerprint stage upstream runs once, not once per branch.
+    sigs = lineage_cut(with_exact_rep(sigs, keys, "asset_id"), cfg, eager=False)
+    reps = sigs.filter(F.col("_rn") == 1).withColumnRenamed(sig_col, "simhash")
+    pairs = simhash_candidate_pairs(reps, cfg, id_col="asset_id", by=by).select("id_a", "id_b")
+    labeled = attach_labels(sigs, connected_components(pairs, config=cfg), by)
+    rest = [c for c in sigs.columns if c not in (*keys, "_rn", "exact_rep")]
+    return labeled.select(*keys, *rest, "cluster_id", "cluster_size")
 
 
 def image_near_dup_clusters(
@@ -571,7 +543,8 @@ def image_near_dup_clusters(
     reference's image similarity path (media_dedup.rs:354-377, d ≤ 6
     of 64 ⇔ ≥90%) on the engine's existing scale machinery.
 
-    Returns (asset_id, phash, decoder, cluster_id, cluster_size)."""
+    Returns (phash, asset_id, decoder, width, height, cluster_id,
+    cluster_size)."""
     from dedup_spark.config import DedupConfig
 
     cfg = config or DedupConfig()
@@ -652,7 +625,7 @@ def audio_near_dup_clusters(
 ) -> DataFrame:
     """Audio near-dup end-to-end: real WAV decode → band-energy
     fingerprint → the same Hamming block-pair join + CC as every other
-    64-bit signature. Returns (asset_id, afp, decoder, cluster_id,
+    64-bit signature. Returns (afp, asset_id, decoder, cluster_id,
     cluster_size)."""
     from dedup_spark.config import DedupConfig
 
@@ -797,14 +770,14 @@ def media_near_dup_clusters(
     # exact collapse, one Hamming join and one connected-components pass
     # with the modality in every key — the reference's same-kind gate
     # without a pipeline per kind. The frame feeds BOTH the clustering
-    # and the leftover anti-join, so it is cut once here (the cut inside
-    # _signature_near_dup_clusters is skipped via precut=True; without
-    # it the ~100 ms/asset JPEG decode would run twice)
+    # and the leftover anti-join, so it is cut here (without the cut the
+    # ~100 ms/asset JPEG decode would run twice); the clustering then
+    # cuts its collapsed frame, as the text pipeline does
     sigs = lineage_cut(
         image_sigs.unionByName(audio_sigs).unionByName(video_sigs), cfg, eager=False
     )
     clustered = labeled(
-        _signature_near_dup_clusters(sigs, "sig", cfg, precut=True, by=("modality",)),
+        _signature_near_dup_clusters(sigs, "sig", cfg, by=("modality",)),
         F.col("modality"),
     )
     leftover = tagged.join(sigs.select("asset_id"), "asset_id", "left_anti")
@@ -1168,8 +1141,8 @@ def video_near_dup_clusters(
 ) -> DataFrame:
     """Video near-dup end-to-end: real Y4M decode → majority frame
     pHash → the same Hamming block-pair join + CC as every other
-    64-bit signature. Returns (asset_id, vfp, n_frames_sampled,
-    decoder, cluster_id, cluster_size)."""
+    64-bit signature. Returns (vfp, asset_id, n_frames_sampled,
+    decoder, width, height, cluster_id, cluster_size)."""
     from dedup_spark.config import DedupConfig
 
     cfg = config or DedupConfig()

@@ -105,16 +105,14 @@ def verify_pairs(
     sig_df: DataFrame,
     config: DedupConfig,
     id_col: str = "file_id",
-    with_content: bool | None = None,
     content_df: DataFrame | None = None,
 ) -> DataFrame:
     """Score candidate pairs and keep those passing the similarity gate.
 
-    Output: (id_a, id_b, est_jaccard, hamming, [jaccard, containment],
-    sim) — ``sim`` is the decision score: exact Jaccard when content
-    verification ran, else the MinHash estimate. A pair passes when
-    ``sim >= similarity_threshold`` OR (containment pass)
-    ``containment >= containment_threshold``.
+    Output: (id_a, id_b, est_jaccard, hamming, jaccard, containment,
+    sim) — ``sim`` is the decision score, the exact shingle Jaccard. A
+    pair passes when ``sim >= similarity_threshold`` OR (containment
+    pass) ``containment >= containment_threshold``.
 
     ``content_df`` (id_col, content) lets callers keep ``content`` OUT
     of the signature frame (and out of every window/checkpoint
@@ -124,8 +122,6 @@ def verify_pairs(
     pipeline and shuffling ~the candidate set's. Defaults to ``sig_df``
     (which then must carry ``content``).
     """
-    if with_content is None:
-        with_content = config.verify_with_content
     joined = attach_pair_signatures(pairs, sig_df, ["minhash", "simhash"], id_col)
     scored = joined.withColumn(
         "est_jaccard",
@@ -160,26 +156,22 @@ def verify_pairs(
         .drop("minhash_a", "minhash_b", "simhash_a", "simhash_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    if with_content:
-        src = content_df if content_df is not None else sig_df
-        scored = attach_pair_signatures(scored, src, ["content"], id_col)
-        # The content pass is CPU-bound Python at ~KB-sized rows: AQE's
-        # size-based coalescing would funnel it into 1-2 partitions and
-        # serialize the UDF — spread it across the cores explicitly.
-        par = pairs.sparkSession.sparkContext.defaultParallelism
-        scored = scored.repartition(par * 2)
-        vudf = make_content_verify_udf(config)
-        scored = (
-            scored.withColumn("_v", vudf(F.col("content_a"), F.col("content_b")))
-            .withColumn("jaccard", F.col("_v.jaccard"))
-            .withColumn("containment", F.col("_v.containment"))
-            .drop("_v", "content_a", "content_b")
-            .withColumn("sim", F.col("jaccard"))
-        )
-        passed = (F.col("sim") >= F.lit(config.similarity_threshold)) | (
-            F.col("containment") >= F.lit(config.containment_threshold)
-        )
-    else:
-        scored = scored.withColumn("sim", F.col("est_jaccard"))
-        passed = F.col("sim") >= F.lit(config.similarity_threshold)
+    src = content_df if content_df is not None else sig_df
+    scored = attach_pair_signatures(scored, src, ["content"], id_col)
+    # The content pass is CPU-bound Python at ~KB-sized rows: AQE's
+    # size-based coalescing would funnel it into 1-2 partitions and
+    # serialize the UDF — spread it across the cores explicitly.
+    par = pairs.sparkSession.sparkContext.defaultParallelism
+    scored = scored.repartition(par * 2)
+    vudf = make_content_verify_udf(config)
+    scored = (
+        scored.withColumn("_v", vudf(F.col("content_a"), F.col("content_b")))
+        .withColumn("jaccard", F.col("_v.jaccard"))
+        .withColumn("containment", F.col("_v.containment"))
+        .drop("_v", "content_a", "content_b")
+        .withColumn("sim", F.col("jaccard"))
+    )
+    passed = (F.col("sim") >= F.lit(config.similarity_threshold)) | (
+        F.col("containment") >= F.lit(config.containment_threshold)
+    )
     return scored.filter(passed)

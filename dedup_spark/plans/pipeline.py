@@ -1,5 +1,6 @@
 """DedupPipeline — the engine API (SURVEY §7.5), orchestrating
-load → signatures → candidates → verify → cluster → plan → report.
+load → collapse (signatures + exact collapse) → candidates → verify →
+cluster → plan → report.
 
 Scale-critical design point: the fuzzy stage (signatures onward) runs on
 **exact-duplicate representatives only** (one row per distinct sha256).
@@ -18,13 +19,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from dedup_spark.checkpoint import SignatureStore, lineage_cut
 from dedup_spark.config import DedupConfig
 from dedup_spark.functions.signatures import with_signatures
-from dedup_spark.operators.cc import connected_components
-from dedup_spark.operators.exact import with_content_hash
+from dedup_spark.operators.cc import attach_labels, connected_components
+from dedup_spark.operators.exact import with_content_hash, with_exact_rep
 from dedup_spark.operators.lsh import lsh_candidate_pairs
 from dedup_spark.operators.report import duplicate_report
 from dedup_spark.operators.select import select_kept
@@ -67,10 +67,39 @@ class DedupPipeline:
         sigs = hits.unionByName(fresh)
         return sigs
 
-    def representatives(self, sigs: DataFrame) -> DataFrame:
-        """One row per distinct content hash (min file_id wins)."""
-        w = Window.partitionBy("hash").orderBy("file_id")
-        return sigs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    def collapse(self, files: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Signatures, the store save, and the exact collapse:
+        ``(members, reps)``. ``members`` is every file with its
+        ``exact_rep`` (min file_id of its hash group) and no signature
+        arrays — the frame cluster assembly labels; ``reps`` is one row
+        per distinct content hash (the min file_id), with signatures —
+        the frame the fuzzy stage runs on."""
+        sigs = self.signatures(files)
+        if self.store is not None:
+            sigs = self._cut(sigs)  # compute once: reused by save + downstream
+            n_reused = sigs.filter(F.col("cache_hit")).count()
+            # append ONLY the fresh rows — the store is generational
+            # (O(batch) saves); cache hits are already in older gens
+            self.store.save(sigs.filter(~F.col("cache_hit")), n_reused=n_reused)
+            sigs = sigs.drop("cache_hit")
+        # content stays behind in ``files``: every downstream window,
+        # join, and checkpoint moves only ids + signatures; verification
+        # re-attaches the body for the (small) surviving pair set. sigs
+        # feeds the candidate joins AND the final cluster assembly —
+        # without a cut, Catalyst re-runs the signature UDF per branch.
+        # One shuffle by hash yields both the representative rank and
+        # exact_rep; reps then derives from the cut frame by a filter.
+        sigs = self._cut(with_exact_rep(sigs.drop("content"), ["hash"], "file_id"))
+        # reps is re-materialized even though it is "just a filter":
+        # candidates + verify scan it ~6 times, and the filtered frame
+        # is both smaller (distinct contents only) and the only carrier
+        # of the heavy signature arrays — repeated consumers must hit
+        # the small blocks, not re-scan the full frame's.
+        reps = self._cut(sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep"))
+        # cluster assembly never touches the signature arrays — drop
+        # them before the exact_rep join + cluster_size window so those
+        # shuffles move ~150B rows, not 128-int minhash payloads
+        return sigs.drop("_rn", "minhash", "simhash", "n_shingles"), reps
 
     def candidates(self, reps: DataFrame, dedupe: bool = True) -> DataFrame:
         """LSH ∪ SimHash candidate pairs over representatives, deduped
@@ -154,34 +183,15 @@ class DedupPipeline:
         )
         return lsh_over.unionByName(sh_over)
 
-    def cluster(self, sigs: DataFrame, verified_pairs: DataFrame) -> DataFrame:
+    def cluster(self, members: DataFrame, verified_pairs: DataFrame) -> DataFrame:
         """Final cluster assignment: exact ∪ fuzzy.
 
-        Every file maps to its exact representative (min file_id of its
-        hash group); representatives are re-labeled by connected
-        components over verified similarity pairs; final cluster_id =
-        component label of the representative (defaults to the
-        representative itself — singleton or exact-only cluster).
-
-        When ``sigs`` already carries ``exact_rep`` (run()'s fused
-        hash-window), the per-hash shuffle here is skipped entirely.
-        """
-        if "exact_rep" in sigs.columns:
-            with_rep = sigs
-        else:
-            w = Window.partitionBy("hash")
-            with_rep = sigs.withColumn("exact_rep", F.min("file_id").over(w))
-        comp = connected_components(
-            verified_pairs, config=self.config
-        ).withColumnsRenamed({"node": "exact_rep", "cluster_id": "fuzzy_label"})
-        # comp scales with the near-dup population (corpus-order on a
-        # dup-heavy corpus) — never let a small-size misestimate
-        # broadcast it (see attach_pair_signatures)
-        out = with_rep.join(comp.hint("merge"), "exact_rep", "left").withColumn(
-            "cluster_id", F.coalesce("fuzzy_label", "exact_rep")
-        ).drop("fuzzy_label")
-        cw = Window.partitionBy("cluster_id")
-        return out.withColumn("cluster_size", F.count(F.lit(1)).over(cw))
+        ``members`` carries ``exact_rep`` (``collapse()``'s first
+        frame); representatives are re-labeled by connected components
+        over verified similarity pairs; final cluster_id = component
+        label of the representative (defaults to the representative
+        itself — singleton or exact-only cluster)."""
+        return attach_labels(members, connected_components(verified_pairs, config=self.config))
 
     # ---- end-to-end ---------------------------------------------------
     def run(self, source: str | DataFrame, min_cluster_size: int = 1) -> DataFrame:
@@ -191,47 +201,10 @@ class DedupPipeline:
             files = source
         else:
             files = prepare_code_files(source, self.config)
-        sigs = self.signatures(files)
-        if self.store is not None:
-            sigs = self._cut(sigs)  # compute once: reused by save + downstream
-            n_reused = sigs.filter(F.col("cache_hit")).count()
-            # append ONLY the fresh rows — the store is generational
-            # (O(batch) saves); cache hits are already in older gens
-            self.store.save(sigs.filter(~F.col("cache_hit")), n_reused=n_reused)
-            sigs = sigs.drop("cache_hit")
-        # content stays behind in ``files``: every downstream window,
-        # join, and checkpoint moves only ids + signatures; verification
-        # re-attaches the body for the (small) surviving pair set. sigs
-        # feeds the candidate joins AND the final cluster assembly —
-        # without a cut, Catalyst re-runs the signature UDF per branch.
-        #
-        # Fused hash-window: ONE shuffle by hash yields both the
-        # representative rank (_rn=1 → one row per distinct content)
-        # and exact_rep (min file_id of the hash group, consumed by
-        # cluster()) — previously representatives() and cluster() each
-        # re-shuffled the full frame by hash. reps then derives from
-        # the cut frame by a free filter instead of a second
-        # checkpoint.
-        w = Window.partitionBy("hash").orderBy("file_id")
-        sigs = self._cut(
-            sigs.drop("content")
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("exact_rep", F.first("file_id").over(w))
-        )
-        # reps is re-materialized even though it is "just a filter":
-        # candidates + verify scan it ~6 times, and the filtered frame
-        # is both smaller (distinct contents only) and the only carrier
-        # of the heavy signature arrays — repeated consumers must hit
-        # the small blocks, not re-scan the full frame's.
-        reps = self._cut(sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep"))
+        members, reps = self.collapse(files)
         pairs = self.candidates(reps)
         verified = self.verify(pairs, reps, content_df=files.select("file_id", "content"))
-        # cluster assembly never touches the signature arrays — drop
-        # them before the exact_rep join + cluster_size window so those
-        # shuffles move ~150B rows, not 128-int minhash payloads
-        clusters = self.cluster(
-            sigs.drop("_rn", "minhash", "simhash", "n_shingles"), verified
-        )
+        clusters = self.cluster(members, verified)
         if min_cluster_size > 1:
             clusters = clusters.filter(F.col("cluster_size") >= min_cluster_size)
         return clusters

@@ -299,7 +299,7 @@ def q_cdc_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dedup_spark.operators.cdc import cdc_near_dup_pairs
 
     return cdc_near_dup_pairs(
-        _files(spark, sf_dir), modulus=16, threshold=0.2)
+        _files(spark, sf_dir), modulus=16, threshold=0.2).orderBy("id_a", "id_b")
 
 
 def q_top_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:

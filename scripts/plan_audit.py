@@ -76,14 +76,16 @@ def main() -> None:
     )
     files = prepare_code_files(raw, cfg)
 
-    sigs = pipe.signatures(files).drop("content").localCheckpoint()
+    # run()'s own collapse: signatures, the fused hash window (one
+    # shuffle yields both the rep rank and exact_rep), its two cuts
+    members, reps = pipe.collapse(files)
     summarize(
         "candidates (LSH ∪ SimHash bucket forms)",
-        pipe.candidates(sigs),
+        pipe.candidates(reps),
         "3: band groupBy, block-pair groupBy, union distinct — NO self-join",
     )
     verified = pipe.verify(
-        pipe.candidates(sigs), sigs, content_df=files.select("file_id", "content")
+        pipe.candidates(reps), reps, content_df=files.select("file_id", "content")
     )
     summarize(
         "verify (cheap tiers → content UDF)",
@@ -93,8 +95,9 @@ def main() -> None:
     )
     summarize(
         "cluster (exact_rep + CC labels)",
-        pipe.cluster(sigs, verified),
-        "hash window (skipped when exact_rep precomputed) + CC + size window",
+        pipe.cluster(members, verified),
+        "CC + one merge label join on exact_rep + size window (no hash "
+        "shuffle: exact_rep comes from collapse()'s cut frame)",
     )
 
     # ANN scale paths: the candidate join must be a bucket/cell
@@ -173,8 +176,9 @@ def main() -> None:
     summarize(
         "image near-dup (real PNG decode → pHash → block-pair join)",
         image_near_dup_clusters(documents_as_png_assets(spark, sf_dir)),
-        "block-pair groupBy + CC + label join + size window; decode UDF "
-        "evaluated once behind a lineage cut",
+        "exact-collapse window + block-pair groupBy + CC + one label join on "
+        "exact_rep + size window; decode UDF evaluated once behind the "
+        "collapse's lineage cut",
     )
     summarize(
         "audio near-dup (real WAV decode → band fingerprint → block-pair join)",

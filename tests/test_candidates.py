@@ -148,8 +148,7 @@ def test_pair_dedup_placement_bit_identical(spark):
     )
     cfg = DedupConfig()
     pipe = DedupPipeline(spark, cfg)
-    sigs = pipe.signatures(df).localCheckpoint()
-    reps = pipe.representatives(sigs)
+    _, reps = pipe.collapse(df)
     raw = pipe.candidates(reps, dedupe=False)
     assert raw.count() > raw.distinct().count()  # the multiset is real
     content = df.select("file_id", "content")
@@ -174,7 +173,7 @@ def test_same_lang_gate(spark):
         (3, "go", "def main return none for i in range len args print i x y z"),
     ]
     df = spark.createDataFrame(rows, "file_id long, lang string, content string")
-    base = DedupConfig(verify_with_content=False)
+    base = DedupConfig()
     pipe_open = DedupPipeline(spark, base)
     sigs = pipe_open.signatures(df.withColumn("content", df.content))
     open_pairs = {

@@ -117,7 +117,7 @@ def test_skew_metrics_surface_dropped_buckets(spark):
     df = spark.createDataFrame(
         rows, "file_id long, repo string, path string, commit string, lang string, content string"
     )
-    cfg = DedupConfig(band_bucket_cap=1, verify_with_content=False)
+    cfg = DedupConfig(band_bucket_cap=1)
     pipe = DedupPipeline(spark, cfg)
     sigs = pipe.signatures(df)
     over = pipe.skew_metrics(sigs)
