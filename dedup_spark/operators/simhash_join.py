@@ -19,6 +19,8 @@ blocks, exact recall, but 68 probe keys/row vs 28 here).
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,31 +39,34 @@ def simhash_blockpair_keys(
     28 keys/row of ≥16-bit value space, vs 68 keys/row for the
     one-bit-flip multi-index scheme, with no flip enumeration at all.
     The ``by`` columns ride along on every key row.
+
+    The C(b,2) key structs are ONE SQL expression (``F.expr`` of an
+    ``array(named_struct(...), ...)``): every PySpark Column call is a
+    py4j round trip, so composing the same ``CreateNamedStruct`` array
+    from Column calls costs ~3.6k of them per build, and a media op
+    builds the keys twice. The string costs a few dozen.
     """
     nblocks = radius + 2
     width = 64 // nblocks  # last block takes the remaining high bits
     widths = [width] * (nblocks - 1) + [64 - width * (nblocks - 1)]
     offsets = [width * i for i in range(nblocks)]
 
-    def block(i: int):
+    def block(i: int) -> str:
         mask = (1 << widths[i]) - 1
-        return F.shiftrightunsigned(F.col("simhash"), offsets[i]).bitwiseAND(F.lit(mask))
+        return f"(shiftrightunsigned(simhash, {offsets[i]}) & {mask})"
 
-    keys = []
-    pair_id = 0
-    for i in range(nblocks):
-        for j in range(i + 1, nblocks):
-            combined = F.shiftleft(block(i), widths[j]).bitwiseOR(block(j))
-            keys.append(
-                F.struct(F.lit(pair_id).alias("block_id"), combined.alias("block_val"))
-            )
-            pair_id += 1
+    structs = [
+        f"named_struct('block_id', {pair_id}, 'block_val', "
+        f"(shiftleft({block(i)}, {widths[j]}) | {block(j)}))"
+        for pair_id, (i, j) in enumerate(combinations(range(nblocks), 2))
+    ]
+    keys = F.expr("array(" + ", ".join(structs) + ")")
     # simhash rides along (8 bytes/key row): the candidate self-join
     # verifies hamming INSIDE the join stage, so false block-pair
     # collisions die in codegen instead of becoming shuffled pairs
     return (
         df.filter(F.col("simhash").isNotNull())
-        .select(id_col, "simhash", *by, F.explode(F.array(*keys)).alias("blk"))
+        .select(id_col, "simhash", *by, F.explode(keys).alias("blk"))
         .select(
             id_col,
             "simhash",

@@ -37,6 +37,15 @@ DEFAULT_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
+    # PySpark captures the Python call site on every DataFrame/Column
+    # call for error context, ~7 extra py4j round trips per call; at
+    # small inputs driver round trips are much of an op's wall time.
+    # Off here: a DataFrame error no longer names the Python file:line
+    # that built the failing expression. Read once per Python process,
+    # from the first active session; a process that starts with
+    # get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+    # "true"}) keeps the capture on.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
 

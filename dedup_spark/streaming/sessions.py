@@ -99,6 +99,17 @@ def streaming_session_dedup(
     with the same ``session_seq`` numbering as the batch form. Requires
     per-key event-time arrival order across micro-batches (see module
     docstring); rows within one micro-batch are sorted here.
+
+    Triggers: the idle timeout is a processing-time timeout, and a state
+    operator with one asks for another (empty) micro-batch after every
+    batch so that timeouts can fire without new data. Under
+    ``trigger(availableNow=True)`` the query therefore never runs out of
+    work: it keeps running empty batches, ``awaitTermination`` only
+    returns on its timeout, and ``processAllAvailable()`` does not
+    return at all. To process what is there and stop, start the query
+    with ``spark.sql.streaming.noDataMicroBatches.enabled=false`` (idle
+    keys are then evicted only in batches that carry data), or run a
+    processing-time trigger and ``stop()`` it.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -6,6 +6,7 @@ from dedup_spark.streaming.sessions import session_dedup, streaming_session_dedu
 
 SCHEMA = "event_id long, user_id long, event_type string, ts timestamp, value double"
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 def _ev(i, user, typ, minutes, seconds=0.0):
@@ -92,11 +93,21 @@ def test_streaming_sessions_match_batch_across_microbatches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # ends once the files are read; the bound only guards a hang
+        assert q.awaitTermination(120)
+        assert not q.isActive
 
-    run_once()
-    spark.createDataFrame(second, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    run_once()
+    # the operator's processing-time timeout asks for an empty
+    # micro-batch after every batch, so availableNow would never run out
+    # of work (see streaming_session_dedup); with empty batches off the
+    # query stops when the data is processed
+    spark.conf.set(NO_DATA_BATCHES, "false")
+    try:
+        run_once()
+        spark.createDataFrame(second, SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        run_once()
+    finally:
+        spark.conf.unset(NO_DATA_BATCHES)
 
     streamed = {
         (r["event_id"], r["session_seq"])
