@@ -11,8 +11,6 @@ then compares only files of the same kind (media_dedup.rs:136-166,
   (``sniff_media_format``);
 - :func:`kind_from_magic_col` — the same first-match rule as one JVM
   ``CASE WHEN`` column, so routing never runs a per-row Python UDF;
-- :func:`retry_col` — the video rows that also carry an audio decoder
-  (the orchestrator's video→audio retry);
 - :func:`decoder_row` — the first row that matches and carries a decoder
   for one facet: ``pixels``, ``samples``, ``frames`` or ``parse``
   (``decode_pixels`` / ``decode_samples`` / ``decode_frames`` /
@@ -556,8 +554,3 @@ def kind_from_magic_col(payload: Column) -> Column:
         kind = kind.when(row.col(payload, head), row.kind)
     return kind.otherwise("blob")
 
-
-def retry_col(payload: Column) -> Column:
-    """Payloads of the formats that can take the video→audio retry."""
-    head = _head(payload)
-    return reduce(or_, (r.col(payload, head) for r in FORMATS if r.audio_retry))

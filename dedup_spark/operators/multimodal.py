@@ -39,7 +39,6 @@ from dedup_spark.functions.formats import (
     kind_from_magic_col,
     load,
     match,
-    retry_col,
     sniff_media_format,
 )
 
@@ -445,46 +444,65 @@ PHASH_SCHEMA = StructType(
 )
 
 
-def image_phash(
-    assets: DataFrame, fake: bool = False, on_undecodable: str = "error"
-) -> DataFrame:
-    """Per-image 64-bit DCT perceptual hash over REAL decoders where
-    numpy + the stdlib suffice (PNG/BMP/baseline JPEG), the
-    deterministic fake elsewhere when ``fake=True`` (reference image
-    pHash, /root/reference/src/media_dedup.rs:182-202). Non-image rows
-    are dropped; ``decoder`` says which decode path produced each row.
-
-    ``on_undecodable='skip'`` drops rows the real decoders cannot
-    handle instead of raising — for callers (the unified orchestrator)
-    that reroute skipped assets to the byte-shingle path, so a skip is
-    observable downstream, never a silent fake.
-
-    mapInPandas Arrow batches; the hash lands in a LongType column
-    bit-compatible with the engine's SimHash machinery, so image
-    near-dup needs no new join code at any scale."""
-
-    def _ph(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _fingerprint(rows, modality: str, raw: bytes, fake: bool, max_frames: int = 16) -> dict:
+    """One asset's 64-bit signature: ``modality``'s decoder facet
+    (``_decode``, so NotImplementedError follows the stub policy) then
+    its kernel — DCT pHash, band-energy fingerprint or frame-hash
+    majority. Returns ``sig``, ``decoder``, ``width``/``height`` (None
+    for audio) and, for video, ``n_frames_sampled``. ``rows`` is the
+    format table the calling UDF closure captured (see ``_decode``)."""
+    if modality == "image":
         from dedup_spark.functions.imagecodec import phash64
 
+        img, w, h, dec = _decode(rows, "pixels", raw, fake)
+        return {"sig": phash64(img), "decoder": dec, "width": w, "height": h}
+    if modality == "audio":
+        from dedup_spark.functions.audiocodec import audio_fingerprint64
+
+        x, rate, dec = _decode(rows, "samples", raw, fake)
+        return {"sig": audio_fingerprint64(x, rate), "decoder": dec, "width": None, "height": None}
+    from dedup_spark.functions.videocodec import video_fingerprint64
+
+    frames, _fps, dec = _decode(rows, "frames", raw, fake, max_frames=max_frames)
+    sig, taken = video_fingerprint64(frames, max_frames=max_frames)
+    return {"sig": sig, "decoder": dec, "width": int(frames.shape[2]),
+            "height": int(frames.shape[1]), "n_frames_sampled": taken}
+
+
+def _fingerprints(
+    assets: DataFrame, modality: str, schema: StructType, fake: bool, max_frames: int = 16
+) -> DataFrame:
+    """One modality's signatures via mapInPandas Arrow batches: rows
+    that do not route to ``modality`` (``_routes_to``) are dropped, the
+    rest go through ``_fingerprint``. ``schema``'s second field names
+    the signature column."""
+    names = schema.fieldNames()
+
+    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                if not _routes_to(FORMATS, raw, kind, "image"):
-                    continue
-                try:
-                    img, w, h, dec = _decode(FORMATS, "pixels", raw, fake)
-                except NotImplementedError:
-                    if on_undecodable == "skip":
-                        continue
-                    raise
-                rows.append(
-                    {"asset_id": int(aid), "phash": phash64(img),
-                     "decoder": dec, "width": w, "height": h}
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in PHASH_SCHEMA.fields])
+                if _routes_to(FORMATS, raw, kind, modality):
+                    fp = _fingerprint(FORMATS, modality, raw, fake, max_frames)
+                    rows.append({**fp, "asset_id": int(aid), names[1]: fp["sig"]})
+            yield pd.DataFrame(rows, columns=names)
 
-    return assets.mapInPandas(_ph, PHASH_SCHEMA)
+    return assets.mapInPandas(_fp, schema)
+
+
+def image_phash(assets: DataFrame, fake: bool = False) -> DataFrame:
+    """Per-image 64-bit DCT perceptual hash over REAL decoders where
+    numpy + the stdlib suffice (PNG/BMP/baseline JPEG), the
+    deterministic fake elsewhere when ``fake=True`` (reference image
+    pHash, /root/reference/src/media_dedup.rs:182-202). Non-image rows
+    are dropped; ``decoder`` says which decode path produced each row;
+    an undecodable image raises NotImplementedError when ``fake=False``.
+
+    mapInPandas Arrow batches; the hash lands in a LongType column
+    bit-compatible with the engine's SimHash machinery, so image
+    near-dup needs no new join code at any scale."""
+    return _fingerprints(assets, "image", PHASH_SCHEMA, fake)
 
 
 def _signature_near_dup_clusters(
@@ -580,44 +598,16 @@ AUDIO_FP_SCHEMA = StructType(
 )
 
 
-def audio_fingerprint(
-    assets: DataFrame, fake: bool = False, on_undecodable: str = "error"
-) -> DataFrame:
+def audio_fingerprint(assets: DataFrame, fake: bool = False) -> DataFrame:
     """Per-clip 64-bit band-energy fingerprint over the REAL WAV
     decoder (``functions/audiocodec.py``), deterministic fake for
     non-WAV kinds when ``fake=True`` (reference audio fingerprint,
     /root/reference/src/audio_fingerprint.rs:9-121). Non-audio rows
     are dropped; ``decoder`` marks which decode path produced each
-    row; ``on_undecodable='skip'`` drops undecodable rows for callers
-    that reroute them (see ``image_phash``). mapInPandas Arrow
-    batches; LongType output bit-compatible with the SimHash Hamming
-    machinery."""
-
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dedup_spark.functions.audiocodec import audio_fingerprint64
-
-        for pdf in batches:
-            rows = []
-            for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if not _routes_to(FORMATS, raw, kind, "audio"):
-                    continue
-                try:
-                    x, rate, dec = _decode(FORMATS, "samples", raw, fake)
-                except NotImplementedError:
-                    if on_undecodable == "skip":
-                        continue
-                    raise
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "afp": audio_fingerprint64(x, rate),
-                        "decoder": dec,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FP_SCHEMA.fields])
-
-    return assets.mapInPandas(_fp, AUDIO_FP_SCHEMA)
+    row; undecodable rows raise as in ``image_phash``. mapInPandas
+    Arrow batches; LongType output bit-compatible with the SimHash
+    Hamming machinery."""
+    return _fingerprints(assets, "audio", AUDIO_FP_SCHEMA, fake)
 
 
 def audio_near_dup_clusters(
@@ -655,10 +645,20 @@ def media_near_dup_clusters(
     ``decoder`` says which real decoder fingerprinted the row ('bytes'
     for the byte-shingle fallback — nothing is ever silently fake).
     Cluster ids are namespaced by modality, so cross-kind pairs can
-    never merge, exactly the reference's gate. The image, audio and
-    video signatures share ONE Hamming join and ONE connected-components
-    pass, with the modality in every bucket key (see
-    ``_signature_near_dup_clusters``).
+    never merge, exactly the reference's gate.
+
+    Every routed asset is decoded in ONE mapInPandas pass that
+    dispatches on its modality (``_fingerprint``), and the image, audio
+    and video signatures share ONE Hamming join and ONE
+    connected-components pass, with the modality in every bucket key
+    (see ``_signature_near_dup_clusters``). Audio-only media containers
+    (Matroska/WebM with no video track: .mka, audio .webm; MPEG system
+    streams; FLV) sniff as video by magic but carry only audio streams:
+    in the same pass, a row the video decoders refuse whose payload
+    matches a format row with ``audio_retry`` is tried once through the
+    audio path (``decode_mka`` refuses video-track files) before it
+    falls to byte shingles — the engine's analog of the reference's
+    ffprobe routing by STREAM inventory, not extension.
 
     ``with_meta=True`` additionally carries the decoded ``width`` /
     ``height`` captured for free during the fingerprint pass (NULL for
@@ -681,8 +681,8 @@ def media_near_dup_clusters(
     tag_kind = F.when(
         F.col("kind").isin("image", "audio", "video"), F.col("kind")
     ).otherwise(F.lit("blob"))
-    # four downstream branches consume this frame — cut lineage so the
-    # upstream scan + magic sniff run once, not once per branch
+    # the decode pass and the leftover anti-join both consume this
+    # frame — cut lineage so the upstream scan + magic sniff run once
     tagged = lineage_cut(
         assets.withColumn(
             "_m",
@@ -691,14 +691,47 @@ def media_near_dup_clusters(
         cfg,
         eager=False,
     )
-
-    null_long = F.lit(None).cast("long")
     meta_cols = ("width", "height") if with_meta else ()
+    names = ["asset_id", "modality", "sig", "decoder", *meta_cols]
 
-    def with_meta_cols(df: DataFrame) -> tuple:
-        return tuple(
-            F.col(c) if c in df.columns else null_long.alias(c) for c in meta_cols
-        )
+    def _sigs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def attempts(modality: str, raw: bytes) -> Iterator[str]:
+            yield modality
+            if modality == "video" and any(r.audio_retry and r.matches(raw) for r in FORMATS):
+                yield "audio"
+
+        for pdf in batches:
+            rows = []
+            for aid, routed, payload in zip(pdf["asset_id"], pdf["_m"], pdf["payload"]):
+                raw = bytes(payload) if payload is not None else b""
+                for modality in attempts(routed, raw):
+                    try:
+                        fp = _fingerprint(FORMATS, modality, raw, fake)
+                    except NotImplementedError:
+                        continue  # retry, or left to the byte-shingle path
+                    rows.append({**fp, "asset_id": int(aid), "modality": modality})
+                    break
+            yield pd.DataFrame(rows, columns=names)
+
+    schema = StructType(
+        [
+            StructField("asset_id", LongType(), False),
+            StructField("modality", StringType(), False),
+            StructField("sig", LongType(), False),
+            StructField("decoder", StringType(), False),
+            *(StructField(c, LongType(), True) for c in meta_cols),
+        ]
+    )
+    # every modality's signatures in ONE frame, tagged by modality: one
+    # exact collapse, one Hamming join and one connected-components pass
+    # with the modality in every key — the reference's same-kind gate
+    # without a pipeline per kind. The frame feeds BOTH the clustering
+    # and the leftover anti-join, so it is cut here (without the cut the
+    # ~100 ms/asset JPEG decode would run twice); the clustering then
+    # cuts its collapsed frame, as the text pipeline does
+    sigs = lineage_cut(
+        tagged.filter(F.col("_m") != "blob").mapInPandas(_sigs, schema), cfg, eager=False
+    )
 
     def labeled(df: DataFrame, modality: Column) -> DataFrame:
         return df.select(
@@ -709,73 +742,10 @@ def media_near_dup_clusters(
                 "cluster_id"
             ),
             "cluster_size",
-            *with_meta_cols(df),
+            *(F.col(c) if c in df.columns else F.lit(None).cast("long").alias(c)
+              for c in meta_cols),
         )
 
-    def signatures(df: DataFrame, modality: str, sig_col: str) -> DataFrame:
-        return df.select(
-            "asset_id",
-            F.lit(modality).alias("modality"),
-            F.col(sig_col).alias("sig"),
-            "decoder",
-            *with_meta_cols(df),
-        )
-
-    # the video signature frame feeds the audio retry's anti-join AND
-    # the union below — cut it so both share one materialization
-    video_sigs = lineage_cut(
-        signatures(
-            video_fingerprint(
-                tagged.filter(F.col("_m") == "video"), fake=fake, on_undecodable="skip"
-            ),
-            "video",
-            "vfp",
-        ),
-        cfg,
-        eager=False,
-    )
-    # Audio-only media containers (Matroska/WebM with no video track:
-    # .mka, audio .webm) sniff as video by magic but carry only audio
-    # streams — rows the video decoders could NOT fingerprint get one
-    # retry through the audio path (kind forced so the audio gate
-    # accepts them; decode_mka refuses video-track files) before
-    # falling to byte shingles. This is the engine's analog of the
-    # reference's ffprobe routing by STREAM inventory, not extension.
-    # Cost: one asset_id anti-join against the already-cut video
-    # signature frame — the same shape as the final leftover join. The
-    # JVM-side magic filter keeps the retry to the table's video rows
-    # that carry an audio decoder (Matroska, MPEG-PS, MPEG-TS, FLV):
-    # failed Y4M/AVI/MP4/H.264 payloads never ship through the extra
-    # Arrow stage at all.
-    video_leftover = (
-        tagged.filter((F.col("_m") == "video") & retry_col(F.col("payload")))
-        .join(video_sigs.select("asset_id"), "asset_id", "left_anti")
-        .withColumn("kind", F.lit("audio"))
-    )
-    image_sigs = signatures(
-        image_phash(tagged.filter(F.col("_m") == "image"), fake, on_undecodable="skip"),
-        "image",
-        "phash",
-    )
-    audio_sigs = signatures(
-        audio_fingerprint(
-            tagged.filter(F.col("_m") == "audio").unionByName(video_leftover),
-            fake,
-            on_undecodable="skip",
-        ),
-        "audio",
-        "afp",
-    )
-    # every modality's signatures in ONE frame, tagged by modality: one
-    # exact collapse, one Hamming join and one connected-components pass
-    # with the modality in every key — the reference's same-kind gate
-    # without a pipeline per kind. The frame feeds BOTH the clustering
-    # and the leftover anti-join, so it is cut here (without the cut the
-    # ~100 ms/asset JPEG decode would run twice); the clustering then
-    # cuts its collapsed frame, as the text pipeline does
-    sigs = lineage_cut(
-        image_sigs.unionByName(audio_sigs).unionByName(video_sigs), cfg, eager=False
-    )
     clustered = labeled(
         _signature_near_dup_clusters(sigs, "sig", cfg, by=("modality",)),
         F.col("modality"),
@@ -1086,54 +1056,19 @@ VIDEO_FP_SCHEMA = StructType(
 
 
 def video_fingerprint(
-    assets: DataFrame,
-    max_frames: int = 16,
-    fake: bool = False,
-    on_undecodable: str = "error",
+    assets: DataFrame, max_frames: int = 16, fake: bool = False
 ) -> DataFrame:
     """Per-clip 64-bit fingerprint over the REAL video decoders (Y4M,
     MJPEG-AVI): evenly sampled frames → per-frame DCT pHash → bitwise
     majority vote (reference frame-hash design,
     /root/reference/src/video_fingerprint.rs:11-103). Non-video rows
-    are dropped; ``decoder`` marks the decode path;
-    ``on_undecodable='skip'`` drops undecodable rows for callers that
-    reroute them (see ``image_phash``). Compressed containers decode
+    are dropped; ``decoder`` marks the decode path; undecodable rows
+    raise as in ``image_phash``. Compressed containers decode
     ONLY the sampled frames (``decode_frames(max_frames=…)``). Robust
     to per-frame noise/re-encode of the SAME frame sequence; a trimmed
     clip samples a different grid and is a different sequence by this
     scheme (documented, matching the reference's sequence compare)."""
-
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dedup_spark.functions.videocodec import video_fingerprint64
-
-        for pdf in batches:
-            rows = []
-            for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                if not _routes_to(FORMATS, raw, kind, "video"):
-                    continue
-                try:
-                    frames, _fps, dec = _decode(
-                        FORMATS, "frames", raw, fake, max_frames=max_frames
-                    )
-                except NotImplementedError:
-                    if on_undecodable == "skip":
-                        continue
-                    raise
-                fp, taken = video_fingerprint64(frames, max_frames=max_frames)
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "vfp": fp,
-                        "n_frames_sampled": taken,
-                        "decoder": dec,
-                        "width": int(frames.shape[2]),
-                        "height": int(frames.shape[1]),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FP_SCHEMA.fields])
-
-    return assets.mapInPandas(_fp, VIDEO_FP_SCHEMA)
+    return _fingerprints(assets, "video", VIDEO_FP_SCHEMA, fake, max_frames)
 
 
 def video_near_dup_clusters(

@@ -7,17 +7,18 @@ Three tiers, cheapest first, each pruning the next tier's input:
    zip_with/aggregate, whole-stage codegen.
 2. SimHash Hamming distance ≤ radius — JVM-side bit_count(xor).
 3. Content verification — exact token-shingle Jaccard plus suffix-
-   automaton LCS containment in an Arrow-batched pandas UDF (only pairs
+   automaton LCS containment in one Arrow-batched mapInPandas pass (only pairs
    surviving tier 1/2 pay the Python cost; content is joined in at this
    point only, never carried through the band shuffle).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from dedup_spark.config import DedupConfig
@@ -31,49 +32,64 @@ _VERIFY_SCHEMA = StructType(
 )
 
 
-def make_content_verify_udf(config: DedupConfig):
+def make_content_verify(config: DedupConfig):
     """Exact shingle Jaccard always; suffix-automaton LCS containment
     only for pairs Jaccard does NOT already admit (containment pairs —
     truncated/extended copies — carry low Jaccard but LCS ≈ 1.0; pairs
     above the similarity threshold pass regardless, so the O(len)
     Python automaton is skipped for them — it is the most expensive
     kernel in the pipeline). Skipped rows emit containment = null.
+
+    Returns a ``mapInPandas`` function over (id_b, id_a, est_jaccard,
+    hamming, content_a, content_b) batches that keeps only the pairs
+    passing the gate, as (id_b, id_a, est_jaccard, hamming, jaccard,
+    containment, sim) — the kernel and the pass filter in one Python
+    evaluation per pair.
     """
     k, unit, norm = config.shingle_k, config.shingle_unit, config.normalize
     threshold = config.similarity_threshold
+    c_threshold = config.containment_threshold
 
-    @pandas_udf(_VERIFY_SCHEMA)
-    def verify_udf(content_a: pd.Series, content_b: pd.Series) -> pd.DataFrame:
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         from dedup_spark.functions.lcs import containment_score
         from dedup_spark.functions.shingles import shingle_set
 
-        # one doc participates in many pairs: memoize its shingle set
-        # for the batch (keyed by the string object's content)
-        cache: dict[str, np.ndarray] = {}
+        for pdf in batches:
+            # one doc participates in many pairs: memoize its shingle
+            # set for the batch (keyed by the string object's content)
+            cache: dict[str, np.ndarray] = {}
 
-        def sh(text: str) -> np.ndarray:
-            s = cache.get(text)
-            if s is None:
-                s = cache[text] = shingle_set(text, k, unit, norm)
-            return s
+            def sh(text: str) -> np.ndarray:
+                s = cache.get(text)
+                if s is None:
+                    s = cache[text] = shingle_set(text, k, unit, norm)
+                return s
 
-        jac, cont = [], []
-        for a, b in zip(content_a, content_b):
-            a = a or ""
-            b = b or ""
-            sa, sb = sh(a), sh(b)
-            if sa.shape[0] == 0 or sb.shape[0] == 0:
-                j = 0.0
-            else:
-                inter = np.intersect1d(sa, sb).shape[0]
-                j = inter / (sa.shape[0] + sb.shape[0] - inter)
-            jac.append(j)
-            cont.append(None if j >= threshold else containment_score(a, b))
-        return pd.DataFrame({"jaccard": jac, "containment": cont})
+            jac, cont = [], []
+            for a, b in zip(pdf["content_a"], pdf["content_b"]):
+                a = a or ""
+                b = b or ""
+                sa, sb = sh(a), sh(b)
+                if sa.shape[0] == 0 or sb.shape[0] == 0:
+                    j = 0.0
+                else:
+                    inter = np.intersect1d(sa, sb).shape[0]
+                    j = inter / (sa.shape[0] + sb.shape[0] - inter)
+                jac.append(j)
+                cont.append(None if j >= threshold else containment_score(a, b))
+            passed = np.array(
+                [j >= threshold or (c is not None and c >= c_threshold)
+                 for j, c in zip(jac, cont)],
+                dtype=bool,
+            )
+            out = pdf[["id_b", "id_a", "est_jaccard", "hamming"]].assign(
+                jaccard=jac, containment=cont, sim=jac
+            )
+            yield out[passed]
 
-    return verify_udf
+    return verify
 
 
 def attach_pair_signatures(
@@ -158,20 +174,14 @@ def verify_pairs(
     )
     src = content_df if content_df is not None else sig_df
     scored = attach_pair_signatures(scored, src, ["content"], id_col)
-    # The content pass is CPU-bound Python at ~KB-sized rows: AQE's
-    # size-based coalescing would funnel it into 1-2 partitions and
-    # serialize the UDF — spread it across the cores explicitly.
-    par = pairs.sparkSession.sparkContext.defaultParallelism
-    scored = scored.repartition(par * 2)
-    vudf = make_content_verify_udf(config)
-    scored = (
-        scored.withColumn("_v", vudf(F.col("content_a"), F.col("content_b")))
-        .withColumn("jaccard", F.col("_v.jaccard"))
-        .withColumn("containment", F.col("_v.containment"))
-        .drop("_v", "content_a", "content_b")
-        .withColumn("sim", F.col("jaccard"))
+    # One Python pass scores each pair AND applies the pass filter: a
+    # UDF column read by a separate filter is evaluated twice (Catalyst
+    # pushes the filter's copy below any exchange placed between them).
+    # The pass runs on the content join's own partitions; an explicit
+    # repartition first would shuffle every ~KB content row once more.
+    fields = {f.name: f for f in scored.schema.fields}
+    schema = StructType(
+        [fields["id_b"], fields["id_a"], fields["est_jaccard"], fields["hamming"],
+         *_VERIFY_SCHEMA.fields, StructField("sim", DoubleType(), False)]
     )
-    passed = (F.col("sim") >= F.lit(config.similarity_threshold)) | (
-        F.col("containment") >= F.lit(config.containment_threshold)
-    )
-    return scored.filter(passed)
+    return scored.mapInPandas(make_content_verify(config), schema)

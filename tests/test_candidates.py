@@ -163,6 +163,40 @@ def test_pair_dedup_placement_bit_identical(spark):
     assert v_raw == v_pre and len(v_raw) == len({(a, b) for a, b, *_ in v_raw})
 
 
+def test_verify_runs_the_content_kernel_once(spark):
+    """The content kernel is ONE Python node in the executed plan, with
+    the pass filter inside it: a UDF column read by a separate filter
+    ran it twice per pair."""
+    from dedup_spark.operators.verify import verify_pairs
+    from dedup_spark.plans.pipeline import DedupPipeline
+
+    base = "\n".join(f"fn_{i} = mod_{i}.call(arg_{i}, {i * 3})" for i in range(30))
+    rows = [
+        (1, "r", "a", "c", "py", base),
+        (2, "r", "b", "c", "py", base.replace("fn_5", "renamed", 1)),
+        (3, "r", "c", "c", "py", base.replace("fn_", "gn_")),
+    ]
+    df = spark.createDataFrame(
+        rows, "file_id long, repo string, path string, commit string, lang string, content string"
+    )
+    pipe = DedupPipeline(spark, CFG)
+    _, reps = pipe.collapse(df)
+    verified = verify_pairs(
+        pipe.candidates(reps), reps, CFG, content_df=df.select("file_id", "content")
+    )
+    assert verified.columns == [
+        "id_b", "id_a", "est_jaccard", "hamming", "jaccard", "containment", "sim"
+    ]
+    assert [(r["id_a"], r["id_b"]) for r in verified.collect()] == [(1, 2)]
+    # the adaptive plan, once run, prints its final plan then its initial one
+    plan = verified._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    python_nodes = [
+        line for line in plan.splitlines()
+        if any(n in line for n in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"))
+    ]
+    assert len(python_nodes) == 1, plan
+
+
 def test_same_lang_gate(spark):
     from dedup_spark.config import DedupConfig
     from dedup_spark.plans.pipeline import DedupPipeline

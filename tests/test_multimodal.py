@@ -353,13 +353,13 @@ def test_format_row_decoder_is_the_only_dispatch(spark):
 
 
 def test_media_orchestrator_decodes_once_per_modality(spark):
-    """The decode+fingerprint mapInPandas frames feed BOTH the
+    """The decode+fingerprint mapInPandas frame feeds BOTH the
     clustering branch and the leftover anti-join; the orchestrator
-    must lineage_cut each ONE time so both consumers share a single
+    must lineage_cut it ONE time so both consumers share a single
     materialization. Regression: the final plan must not contain the
-    decode UDFs at all (they live behind the cut's LogicalRDD) — if
-    either branch re-derived them from the raw assets, `_ph`/`_fp`
-    would reappear in the optimized plan and JPEG-heavy corpora
+    decode UDF at all (it lives behind the cut's LogicalRDD) — if
+    either branch re-derived it from the raw assets, `_sigs` would
+    reappear in the optimized plan and JPEG-heavy corpora
     (~116 ms/asset) would pay decode twice."""
     import numpy as np
 
@@ -376,8 +376,115 @@ def test_media_orchestrator_decodes_once_per_modality(spark):
     )
     out = media_near_dup_clusters(df)
     plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "_ph(" not in plan and "_fp(" not in plan, plan
+    assert "_sigs(" not in plan, plan
     assert out.count() == 2  # and the shared-cut plan still executes
+
+
+def test_media_orchestrator_decodes_in_one_python_pass(spark):
+    """Every modality, and the video→audio retry, decode in ONE
+    MapInPandas: among the plans the orchestrator materializes, exactly
+    one Python map reads the payload (three when each modality had its
+    own stage)."""
+    from unittest import mock
+
+    import numpy as np
+
+    import dedup_spark.checkpoint as ckpt
+    from dedup_spark.functions.audiocodec import encode_mka, encode_wav_pcm16
+    from dedup_spark.functions.imagecodec import encode_png_gray8
+    from dedup_spark.functions.videocodec import encode_y4m
+    from dedup_spark.operators.multimodal import media_near_dup_clusters
+
+    img = (np.arange(32 * 32, dtype=np.uint8).reshape(32, 32)) % 251
+    clip = np.sin(np.linspace(0, 300, 8000)) * 0.5
+    rows = [
+        (1, "", encode_png_gray8(img), None),
+        (2, "", encode_wav_pcm16(clip, 8000), None),
+        (3, "", encode_y4m(np.stack([img] * 4)), None),
+        (4, "", encode_mka(clip, 8000), None),
+        (5, "", b"plain text blob" * 20, None),
+    ]
+    df = spark.createDataFrame(rows, ASSET_SCHEMA)
+    real, plans = ckpt.lineage_cut, []
+
+    def spy(frame, cfg, eager=True):
+        plans.append(frame._jdf.queryExecution().optimizedPlan().toString())
+        return real(frame, cfg, eager)
+
+    with mock.patch.object(ckpt, "lineage_cut", spy):
+        out = {r["asset_id"]: r["modality"] for r in media_near_dup_clusters(df).collect()}
+    assert out == {1: "image", 2: "audio", 3: "video", 4: "audio", 5: "blob"}
+    decode = [
+        line for plan in plans for line in plan.splitlines()
+        if "MapInPandas" in line and "payload#" in line
+    ]
+    assert len(decode) == 1, decode
+
+
+def test_media_orchestrator_rows_match_per_modality_functions(spark):
+    """The one decode pass gives each asset the same (modality,
+    decoder, cluster_id, cluster_size) as the per-modality functions
+    on the assets each one can fingerprint, with the byte-shingle path
+    taking the rest: an audio-only Matroska takes the video→audio
+    retry, a corrupt PNG reroutes to ``blob`` and a magic-less TGA
+    routes by its kind tag."""
+    import numpy as np
+
+    from dedup_spark.functions.audiocodec import encode_mka, encode_wav_pcm16
+    from dedup_spark.functions.imagecodec import encode_png_gray8, encode_tga_gray8
+    from dedup_spark.functions.videocodec import encode_y4m
+    from dedup_spark.operators.multimodal import (
+        audio_near_dup_clusters,
+        binary_near_dup_clusters,
+        image_near_dup_clusters,
+        media_near_dup_clusters,
+        video_near_dup_clusters,
+    )
+
+    yy, xx = np.mgrid[0:32, 0:32]
+    img = np.minimum(yy * 5 + xx * 3, 255).astype(np.uint8)
+    other = (255 - np.minimum(yy * 2 + xx * 7, 255)).astype(np.uint8)
+    clip = np.sin(np.linspace(0, 300, 8000)) * 0.5
+    png = encode_png_gray8(img)
+    blob = bytes(range(256)) * 8
+    mka, corrupt = 5, 6
+    rows = [
+        (1, "", png, None),
+        (2, "image", encode_tga_gray8(img), None),  # no magic: the tag routes it
+        (3, "", encode_png_gray8(other), None),
+        (4, "", encode_wav_pcm16(clip, 8000), None),
+        (mka, "", encode_mka(clip, 8000, codec="pcm"), None),  # sniffs as video
+        (corrupt, "", png[: len(png) // 2], None),  # PNG magic, truncated body
+        (7, "", encode_y4m(np.stack([img, other] * 2)), None),
+        (8, "", encode_y4m(np.stack([img, other] * 2)), None),
+        (9, "", blob, None),
+        (10, "", blob[:-8] + b"tailtail", None),
+    ]
+    df = spark.createDataFrame(rows, ASSET_SCHEMA)
+    got = {
+        r["asset_id"]: (r["modality"], r["decoder"], r["cluster_id"], r["cluster_size"])
+        for r in media_near_dup_clusters(df).collect()
+    }
+    aid = F.col("asset_id")
+    per_modality = (
+        ("image", image_near_dup_clusters(df.filter(aid != corrupt))),
+        # the retry, spelled out: the Matroska row as the audio path sees it
+        ("audio", audio_near_dup_clusters(
+            df.withColumn("kind", F.when(aid == mka, "audio").otherwise(F.col("kind")))
+        )),
+        ("video", video_near_dup_clusters(df.filter(aid != mka))),
+        ("blob", binary_near_dup_clusters(df.filter(aid.isin(corrupt, 9, 10)))
+            .withColumn("decoder", F.lit("bytes"))),
+    )
+    want = {
+        r["asset_id"]: (m, r["decoder"], f"{m}:{r['cluster_id']}", r["cluster_size"])
+        for m, frame in per_modality
+        for r in frame.collect()
+    }
+    assert got == want
+    assert got[2][:3] == ("image", "tga", got[1][2])
+    assert got[mka][0] == "audio" and got[mka][2] == got[4][2]
+    assert got[corrupt][:2] == ("blob", "bytes")
 
 
 def test_media_near_dup_clusters_routes_by_kind(spark):
