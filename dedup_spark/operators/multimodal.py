@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -119,18 +119,11 @@ def byte_shingles(assets: DataFrame, k: int = 8, stride: int = 4) -> DataFrame:
     return hexed.select("asset_id", shingles.alias("shingles")).drop("_hex")
 
 
-def binary_near_dup_clusters(assets: DataFrame, config=None) -> DataFrame:
-    """Content-free near-dup clustering over binary payloads — the
-    working dedup the byte-shingle plumbing feeds (reference media
-    near-dup, /root/reference/src/media_dedup.rs:556-587, re-expressed
-    on the engine's full MinHash/SimHash/verify/CC pipeline).
-
-    The payload is lifted to its hex string and run through the SAME
-    signature kernels with char-16 shingles (= 8-byte shingles,
-    byte_shingles' k default): no second code path, every scale guard
-    (bucket caps, rep collapse, tiered verify) applies to binaries
-    unchanged. Returns (asset_id, cluster_id, cluster_size).
-    """
+def _blob_pipeline(assets: DataFrame, config=None):
+    """The byte-shingle ``DedupPipeline`` and its file frame: the hex
+    payload through the SAME kernels with char-16 (= 8-byte) shingles.
+    No ``cache_path``: the text store's (repo, path, commit) key cannot
+    tell blob rows from text rows."""
     from dedup_spark.config import DedupConfig
     from dedup_spark.plans.pipeline import DedupPipeline
 
@@ -139,6 +132,7 @@ def binary_near_dup_clusters(assets: DataFrame, config=None) -> DataFrame:
         shingle_k=16,          # 16 hex chars = 8 payload bytes
         normalize=False,       # bytes are bytes — no case folding
         size_prefilter=False,
+        cache_path=None,
     )
     files = assets.select(
         F.col("asset_id").alias("file_id"),
@@ -149,11 +143,23 @@ def binary_near_dup_clusters(assets: DataFrame, config=None) -> DataFrame:
         F.lower(F.hex("payload")).alias("content"),
         F.octet_length("payload").cast("long").alias("size"),
     )
-    pipe = DedupPipeline(assets.sparkSession, cfg)
-    clusters = pipe.run(files)
-    return clusters.select(
-        F.col("file_id").alias("asset_id"), "cluster_id", "cluster_size"
-    )
+    return DedupPipeline(assets.sparkSession, cfg), files
+
+
+def binary_near_dup_clusters(assets: DataFrame, config=None) -> DataFrame:
+    """Content-free near-dup clustering over binary payloads — the
+    working dedup the byte-shingle plumbing feeds (reference media
+    near-dup, /root/reference/src/media_dedup.rs:556-587, re-expressed
+    on the engine's full MinHash/SimHash/verify/CC pipeline).
+
+    ``cluster(*edges(files))`` of ``_blob_pipeline``: every scale guard
+    (bucket caps, rep collapse, tiered verify) applies to binaries, and
+    ``media_near_dup_clusters`` takes the same ``edges()`` into its one
+    graph. Returns (asset_id, cluster_id, cluster_size).
+    """
+    pipe, files = _blob_pipeline(assets, config)
+    clusters = pipe.cluster(*pipe.edges(files))
+    return clusters.select(F.col("file_id").alias("asset_id"), "cluster_id", "cluster_size")
 
 
 # ---- decode-adjacent plumbing: resize / frame-sample / features ----------
@@ -505,34 +511,21 @@ def image_phash(assets: DataFrame, fake: bool = False) -> DataFrame:
     return _fingerprints(assets, "image", PHASH_SCHEMA, fake)
 
 
-def _signature_near_dup_clusters(
+def _signature_edges(
     sigs: DataFrame, sig_col: str, cfg, by: tuple[str, ...] = (),
-) -> DataFrame:
-    """Shared assembly for 64-bit perceptual signatures (image pHash,
-    audio fingerprint, video frame-hash majority): exact collapse →
-    Hamming block-pair probing join over the representatives →
-    connected components → labels, with the collapse
-    (``exact.with_exact_rep``) and the label step (``cc.attach_labels``)
-    shared with the text engine's ``DedupPipeline``. Identical
-    covering-design recall and bucket caps as the text SimHash path —
-    one scale machinery for every modality.
-
-    ``by`` columns gate the graph: the exact collapse, the block-pair
-    buckets (and so the ``band_bucket_cap`` count) and the cluster-size
-    window are all keyed by them, so rows that differ on ``by`` never
-    pair. The media orchestrator passes ``("modality",)`` and runs ONE
-    join and ONE connected-components pass over every modality's
-    signatures; each component's minimum id is the same as when each
-    modality runs alone, because no edge crosses a modality.
-
-    Returns ``sigs``' columns (``by`` and ``sig_col`` first) plus
-    ``cluster_id`` and ``cluster_size``."""
+) -> tuple[DataFrame, DataFrame]:
+    """The graph of 64-bit perceptual signatures (image pHash, audio
+    fingerprint, video frame-hash majority) before assembly:
+    ``(members, pairs)`` — ``sigs`` with the text engine's exact
+    collapse (``_rn``, ``exact_rep``) and the ``(id_a, id_b)`` Hamming
+    block-pair join over the representatives, with the text SimHash
+    path's recall and bucket caps. ``by`` columns key the collapse and
+    the buckets (and so the ``band_bucket_cap`` count): rows that
+    differ on ``by`` never pair."""
     from dedup_spark.checkpoint import lineage_cut
-    from dedup_spark.operators.cc import attach_labels, connected_components
     from dedup_spark.operators.exact import with_exact_rep
     from dedup_spark.operators.simhash_join import simhash_candidate_pairs
 
-    keys = [*by, sig_col]
     # exact-signature collapse BEFORE the Hamming join — the same
     # min-id collapse the text pipeline applies before LSH: a web-scale
     # media corpus carries one asset verbatim millions of times, and
@@ -545,11 +538,27 @@ def _signature_near_dup_clusters(
     # at 60k assets without the collapse; 1.0 with it). The collapsed
     # frame feeds both the join and the labels — cut it, so the
     # decode+fingerprint stage upstream runs once, not once per branch.
-    sigs = lineage_cut(with_exact_rep(sigs, keys, "asset_id"), cfg, eager=False)
+    sigs = lineage_cut(with_exact_rep(sigs, [*by, sig_col], "asset_id"), cfg, eager=False)
     reps = sigs.filter(F.col("_rn") == 1).withColumnRenamed(sig_col, "simhash")
     pairs = simhash_candidate_pairs(reps, cfg, id_col="asset_id", by=by).select("id_a", "id_b")
-    labeled = attach_labels(sigs, connected_components(pairs, config=cfg), by)
-    rest = [c for c in sigs.columns if c not in (*keys, "_rn", "exact_rep")]
+    return sigs, pairs
+
+
+def _signature_near_dup_clusters(
+    sigs: DataFrame, sig_col: str, config=None, by: tuple[str, ...] = (),
+) -> DataFrame:
+    """``_signature_edges`` → CC → ``cc.attach_labels``, sizes keyed by
+    ``by``: ``sigs``' columns (``by``, ``sig_col`` first), ``cluster_id``
+    and ``cluster_size``. ``media_near_dup_clusters`` takes the edges
+    alone into its one CC and label join, blob verified pairs included."""
+    from dedup_spark.config import DedupConfig
+    from dedup_spark.operators.cc import attach_labels, connected_components
+
+    cfg = config or DedupConfig()
+    keys = [*by, sig_col]
+    members, pairs = _signature_edges(sigs, sig_col, cfg, by)
+    labeled = attach_labels(members, connected_components(pairs, config=cfg), by)
+    rest = [c for c in members.columns if c not in (*keys, "_rn", "exact_rep")]
     return labeled.select(*keys, *rest, "cluster_id", "cluster_size")
 
 
@@ -563,10 +572,7 @@ def image_near_dup_clusters(
 
     Returns (phash, asset_id, decoder, width, height, cluster_id,
     cluster_size)."""
-    from dedup_spark.config import DedupConfig
-
-    cfg = config or DedupConfig()
-    return _signature_near_dup_clusters(image_phash(assets, fake=fake), "phash", cfg)
+    return _signature_near_dup_clusters(image_phash(assets, fake=fake), "phash", config)
 
 
 def decode_samples(payload: bytes, fake: bool = False) -> tuple:
@@ -617,12 +623,7 @@ def audio_near_dup_clusters(
     fingerprint → the same Hamming block-pair join + CC as every other
     64-bit signature. Returns (afp, asset_id, decoder, cluster_id,
     cluster_size)."""
-    from dedup_spark.config import DedupConfig
-
-    cfg = config or DedupConfig()
-    return _signature_near_dup_clusters(
-        audio_fingerprint(assets, fake=fake), "afp", cfg
-    )
+    return _signature_near_dup_clusters(audio_fingerprint(assets, fake=fake), "afp", config)
 
 
 def media_near_dup_clusters(
@@ -649,9 +650,11 @@ def media_near_dup_clusters(
 
     Every routed asset is decoded in ONE mapInPandas pass that
     dispatches on its modality (``_fingerprint``), and the image, audio
-    and video signatures share ONE Hamming join and ONE
-    connected-components pass, with the modality in every bucket key
-    (see ``_signature_near_dup_clusters``). Audio-only media containers
+    and video signatures share ONE Hamming join keyed by modality
+    (``_signature_edges``). The leftover assets add the byte-shingle
+    pipeline's ``edges()`` (members and verified pairs), and ONE
+    connected-components pass and ONE label join assemble all four
+    modalities. Audio-only media containers
     (Matroska/WebM with no video track: .mka, audio .webm; MPEG system
     streams; FLV) sniff as video by magic but carry only audio streams:
     in the same pass, a row the video decoders refuse whose payload
@@ -669,6 +672,7 @@ def media_near_dup_clusters(
     """
     from dedup_spark.checkpoint import lineage_cut
     from dedup_spark.config import DedupConfig
+    from dedup_spark.operators.cc import attach_labels, connected_components
 
     cfg = config or DedupConfig()
     # routing = content magic first, the caller's kind tag as the
@@ -723,39 +727,34 @@ def media_near_dup_clusters(
         ]
     )
     # every modality's signatures in ONE frame, tagged by modality: one
-    # exact collapse, one Hamming join and one connected-components pass
-    # with the modality in every key — the reference's same-kind gate
-    # without a pipeline per kind. The frame feeds BOTH the clustering
-    # and the leftover anti-join, so it is cut here (without the cut the
-    # ~100 ms/asset JPEG decode would run twice); the clustering then
-    # cuts its collapsed frame, as the text pipeline does
+    # exact collapse and one Hamming join with the modality in every
+    # key — the reference's same-kind gate without a pipeline per kind.
+    # The frame feeds BOTH the graph and the leftover anti-join, so it
+    # is cut here (without the cut the ~100 ms/asset JPEG decode would
+    # run twice); _signature_edges then cuts its collapsed frame, as
+    # the text pipeline does
     sigs = lineage_cut(
         tagged.filter(F.col("_m") != "blob").mapInPandas(_sigs, schema), cfg, eager=False
     )
 
-    def labeled(df: DataFrame, modality: Column) -> DataFrame:
-        return df.select(
-            "asset_id",
-            modality.alias("modality"),
-            F.col("decoder"),
-            F.concat(modality, F.lit(":"), F.col("cluster_id").cast("string")).alias(
-                "cluster_id"
-            ),
-            "cluster_size",
-            *(F.col(c) if c in df.columns else F.lit(None).cast("long").alias(c)
-              for c in meta_cols),
-        )
-
-    clustered = labeled(
-        _signature_near_dup_clusters(sigs, "sig", cfg, by=("modality",)),
-        F.col("modality"),
+    members, pairs = _signature_edges(sigs, "sig", cfg, by=("modality",))
+    pipe, files = _blob_pipeline(tagged.join(sigs.select("asset_id"), "asset_id", "left_anti"), cfg)
+    blob_members, blob_pairs = pipe.edges(files)
+    blob_members = blob_members.select(
+        F.col("file_id").alias("asset_id"), F.lit("blob").alias("modality"),
+        F.lit("bytes").alias("decoder"), "exact_rep",
+        *(F.lit(None).cast("long").alias(c) for c in meta_cols),
     )
-    leftover = tagged.join(sigs.select("asset_id"), "asset_id", "left_anti")
-    blobs = labeled(
-        binary_near_dup_clusters(leftover, cfg).withColumn("decoder", F.lit("bytes")),
-        F.lit("blob"),
+    # asset ids are unique and no edge crosses a modality, so one
+    # components pass over the union labels each modality as its own
+    # pass would
+    comp = connected_components(pairs.union(blob_pairs.select("id_a", "id_b")), config=cfg)
+    members = members.select(*blob_members.columns).unionByName(blob_members)
+    return attach_labels(members, comp, by=("modality",)).select(
+        "asset_id", "modality", "decoder",
+        F.concat("modality", F.lit(":"), F.col("cluster_id").cast("string")).alias("cluster_id"),
+        "cluster_size", *meta_cols,
     )
-    return clustered.unionByName(blobs)
 
 
 MEDIA_KEEPER_META_SCHEMA = (
@@ -1078,12 +1077,7 @@ def video_near_dup_clusters(
     pHash → the same Hamming block-pair join + CC as every other
     64-bit signature. Returns (vfp, asset_id, n_frames_sampled,
     decoder, width, height, cluster_id, cluster_size)."""
-    from dedup_spark.config import DedupConfig
-
-    cfg = config or DedupConfig()
-    return _signature_near_dup_clusters(
-        video_fingerprint(assets, fake=fake), "vfp", cfg
-    )
+    return _signature_near_dup_clusters(video_fingerprint(assets, fake=fake), "vfp", config)
 
 
 def documents_as_y4m_assets(spark, sf_dir: str, n_frames: int = 8) -> DataFrame:

@@ -1,6 +1,8 @@
 """DedupPipeline — the engine API (SURVEY §7.5), orchestrating
-load → collapse (signatures + exact collapse) → candidates → verify →
-cluster → plan → report.
+load → edges (collapse → candidates → verify) → cluster → plan →
+report. ``run()`` is ``cluster(*edges(files))``: edges first, then
+assembly, so a caller that merges graphs (the media orchestrator's
+byte-shingle assets) takes ``edges()`` alone.
 
 Scale-critical design point: the fuzzy stage (signatures onward) runs on
 **exact-duplicate representatives only** (one row per distinct sha256).
@@ -183,28 +185,34 @@ class DedupPipeline:
         )
         return lsh_over.unionByName(sh_over)
 
-    def cluster(self, members: DataFrame, verified_pairs: DataFrame) -> DataFrame:
-        """Final cluster assignment: exact ∪ fuzzy.
+    def edges(self, files: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """The graph before assembly: ``(members, verified)`` —
+        ``collapse()``'s members (with ``exact_rep``) and the ``(id_a,
+        id_b)`` representative pairs that passed ``verify()``."""
+        members, reps = self.collapse(files)
+        content = files.select("file_id", "content")
+        return members, self.verify(self.candidates(reps), reps, content_df=content)
 
-        ``members`` carries ``exact_rep`` (``collapse()``'s first
-        frame); representatives are re-labeled by connected components
-        over verified similarity pairs; final cluster_id = component
-        label of the representative (defaults to the representative
+    def cluster(self, members: DataFrame, verified_pairs: DataFrame) -> DataFrame:
+        """Assembly of ``edges()``: exact ∪ fuzzy cluster assignment.
+
+        Representatives are re-labeled by connected components over
+        verified similarity pairs; final cluster_id = component label of
+        the member's ``exact_rep`` (defaults to the representative
         itself — singleton or exact-only cluster)."""
         return attach_labels(members, connected_components(verified_pairs, config=self.config))
 
     # ---- end-to-end ---------------------------------------------------
     def run(self, source: str | DataFrame, min_cluster_size: int = 1) -> DataFrame:
+        """``cluster(*edges(files))`` of ``source`` (a path, a files
+        frame or a raw code table), then ``min_cluster_size``."""
         if isinstance(source, str):
             files = self.load(source)
         elif "file_id" in source.columns:
             files = source
         else:
             files = prepare_code_files(source, self.config)
-        members, reps = self.collapse(files)
-        pairs = self.candidates(reps)
-        verified = self.verify(pairs, reps, content_df=files.select("file_id", "content"))
-        clusters = self.cluster(members, verified)
+        clusters = self.cluster(*self.edges(files))
         if min_cluster_size > 1:
             clusters = clusters.filter(F.col("cluster_size") >= min_cluster_size)
         return clusters

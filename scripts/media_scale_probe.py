@@ -66,7 +66,7 @@ def _make_payload(aid: int) -> tuple[bytes, int]:
         # adversarial mass-duplicate regime: only 13 distinct audio
         # signals across ALL groups — thousands of identical
         # signatures per signal. Without the exact-signature collapse
-        # in _signature_near_dup_clusters this overflows the 512
+        # in _signature_edges this overflows the 512
         # bucket cap and recall drops to ~1/3; with it, recall is 1.0
         # at any multiplicity.
         x = np.sin(np.linspace(0, 40 + (seed % 13), 4096)) * 0.3

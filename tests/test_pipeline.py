@@ -149,3 +149,32 @@ def test_reliable_checkpoint_mode_matches_local(spark, corpus, clusters, tmp_pat
     assert a == b
     ckpt = str(tmp_path / "ckpt")
     assert os.path.isdir(ckpt) and any(os.scandir(ckpt))  # files were written
+
+
+def test_run_is_cluster_of_edges(spark):
+    """``run()`` is graph assembly over ``edges()``: on a seeded synthetic
+    corpus (exact and near copies), ``cluster(*edges(files))`` gives
+    run()'s rows, and ``edges()`` returns the members with their exact
+    representative plus the verified representative pairs."""
+    from dedup_spark.config import DedupConfig
+    from dedup_spark.sources.loader import prepare_code_files
+    from dedup_spark.sources.synth import synth_code_corpus
+
+    cfg = DedupConfig()
+    pipe = DedupPipeline(spark, cfg)
+    files = prepare_code_files(synth_code_corpus(spark, 40, seed=7, partitions=2), cfg).localCheckpoint()
+    members, verified = pipe.edges(files)
+    assert "exact_rep" in members.columns and members.count() == 40
+    assert {"id_a", "id_b"} <= set(verified.columns)
+    reps = {r["exact_rep"] for r in members.collect()}
+    pairs = verified.select("id_a", "id_b").collect()
+    assert pairs and all(r["id_a"] in reps and r["id_b"] in reps for r in pairs)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assembled = pipe.cluster(members, verified)
+    run = pipe.run(files)
+    assert assembled.columns == run.columns
+    assert rows(assembled) == rows(run)
+    assert rows(assembled.filter("cluster_size >= 2")) == rows(pipe.run(files, min_cluster_size=2))
