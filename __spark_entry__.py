@@ -131,10 +131,8 @@ def _q_binary_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified since round 3: the oracle rebuilds the hex payloads,
     brute-forces char-16-gram Jaccard with the verify gate, and labels
     components via the same recursive closure as near_dup_clusters."""
-    from dedup_spark.operators.multimodal import (
-        binary_near_dup_clusters,
-        documents_as_assets,
-    )
+    from dedup_spark.operators.multimodal import binary_near_dup_clusters
+    from dedup_spark.sources.assets import documents_as_assets
 
     assets = documents_as_assets(spark, sf_dir)
     return binary_near_dup_clusters(assets).orderBy("asset_id")

@@ -62,9 +62,11 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.abspath(__file__))
+
 WORKER = '''
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from pyspark.sql import functions as F
 from dedup_spark.config import DedupConfig
 from dedup_spark.plans.pipeline import DedupPipeline
@@ -176,8 +178,8 @@ def run_level(cores: int, n: int) -> dict:
     # Python workers) queue behind the pin instead of spreading to an
     # idle core — which is scheduler behavior, not extra silicon.
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, str(cores), str(n)],
-        capture_output=True, text=True, timeout=4000, cwd="/root/repo", env=env,
+        [sys.executable, "-c", WORKER, str(cores), str(n), REPO],
+        capture_output=True, text=True, timeout=4000, cwd=REPO, env=env,
     )
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):

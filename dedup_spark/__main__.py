@@ -27,6 +27,8 @@ import sys
 
 from pyspark.sql import functions as F
 
+from dedup_spark.config import HASH_ALGORITHMS, KEEP_STRATEGIES
+
 
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
@@ -35,7 +37,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument("tables", nargs="+", help="input tables (parquet paths or catalog names)")
     p.add_argument("--config", help=".deduprc-style TOML config file")
-    p.add_argument("--algorithm", choices=["sha256", "sha1", "md5", "crc32", "xxhash64"])
+    p.add_argument("--algorithm", choices=HASH_ALGORITHMS)
     p.add_argument("--include", action="append", default=None, help="glob include (repeatable)")
     p.add_argument("--exclude", action="append", default=None, help="glob exclude (repeatable)")
     p.add_argument("--filter-from", help="rclone-style filter rules file")
@@ -45,7 +47,7 @@ def build_parser() -> argparse.ArgumentParser:
                    type=int, default=None, metavar="0-100",
                    help="similarity threshold percent (reference --media-similarity)")
     p.add_argument("--selection-strategy", "--mode", dest="strategy", default=None,
-                   choices=["newest_modified", "oldest_modified", "shortest_path", "longest_path"],
+                   choices=KEEP_STRATEGIES,
                    help="keep-selection strategy (reference --mode)")
     p.add_argument("--media-formats", default=None, metavar="CSV",
                    help="keep-preference list, highest priority first "

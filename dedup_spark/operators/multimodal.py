@@ -1,18 +1,19 @@
 """Multimodal asset plumbing: opaque ``binary`` payload columns with
 typed metadata, processed through Arrow-batched ``mapInPandas``.
 
-The Spark-side contract is real and tested — schema, partition-safe
-batch iteration, UDF signatures, deterministic outputs. The actual
-media decoding (image resize, audio resample, video frame-sample)
-is STUBBED: the decode libraries are not in this container, so
-``decode_asset`` raises NotImplementedError unless ``fake=True``
-selects the deterministic fake decoder (byte-structure parsing only).
+Media decoding is real wherever numpy and the stdlib suffice: every
+decode reads the format table (``functions/formats.py``), whose rows
+name the codec modules under ``functions/`` that open each format. A
+payload no row decodes (a compressed codec without a decoder here, or a
+corrupt file) follows the stub policy: ``fake=True`` gives a
+deterministic byte-structure fake whose ``decoder`` reads 'fake',
+``fake=False`` raises NotImplementedError.
 
 Reference tie-in: the reference's media pipeline (MediaFileInfo +
-MediaMetadata, /root/reference/src/media_dedup.rs:107-133) computes
-per-file metadata then fingerprints; this module is that boundary for
-binary payloads, with the fingerprint stage handed to the engine's
-SimHash/MinHash kernels over extracted byte shingles.
+MediaMetadata, media_dedup.rs:107-133) computes per-file metadata then
+fingerprints; this module is that boundary for binary payloads, with
+the fingerprint stage handed to the engine's SimHash/MinHash kernels
+over extracted byte shingles.
 """
 
 from __future__ import annotations
@@ -80,7 +81,7 @@ def decode_asset(payload: bytes, kind: str, fake: bool = False) -> dict:
     return {"n_bytes": len(payload), "concentration_q": (peak * 1000) // total}
 
 
-def extract_asset_meta(assets: DataFrame, batch_size_hint: int = 1024) -> DataFrame:
+def extract_asset_meta(assets: DataFrame) -> DataFrame:
     """mapInPandas metadata extraction: per-partition Arrow batches in,
     typed META_SCHEMA rows out. No collect, no per-row Python UDF."""
 
@@ -163,12 +164,13 @@ def binary_near_dup_clusters(assets: DataFrame, config=None) -> DataFrame:
 
 
 # ---- decode-adjacent plumbing: resize / frame-sample / features ----------
-# The decode boundary stays honestly stubbed (no media libs here): the
-# *fake* is only the bytes→pixels / bytes→duration step, clearly
-# factored into _fake_pixels/_fake_duration_ms where a real decoder
-# (PIL / ffmpeg) would plug in. Everything after the boundary —
-# nearest-neighbor resampling math, frame timestamp arithmetic, Arrow
-# batch shapes, one-to-many output schemas — is real and tested.
+# resize_images decodes through the format table (fake fallback on);
+# sample_frames takes its duration and frames from the payload bytes
+# (_fake_duration_ms), where a real demuxer would plug in. The fakes
+# are factored into _fake_pixels / _fake_samples / _fake_frames.
+# Everything after the decode — nearest-neighbor resampling math, frame
+# timestamp arithmetic, Arrow batch shapes, one-to-many output
+# schemas — is real and tested.
 
 RESIZED_SCHEMA = StructType(
     [
@@ -441,7 +443,7 @@ PHASH_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
         StructField("phash", LongType(), False),   # 64-bit DCT perceptual hash
-        StructField("decoder", StringType(), False),  # png | bmp | fake
+        StructField("decoder", StringType(), False),  # a FORMATS decoder token | fake
         # decoded geometry, free at fingerprint time — the media
         # keeper's resolution key without a second decode pass
         StructField("width", LongType(), True),
@@ -599,7 +601,7 @@ AUDIO_FP_SCHEMA = StructType(
     [
         StructField("asset_id", LongType(), False),
         StructField("afp", LongType(), False),      # 64-bit band-energy fingerprint
-        StructField("decoder", StringType(), False),  # wav | fake
+        StructField("decoder", StringType(), False),  # a FORMATS decoder token | fake
     ]
 )
 
@@ -897,124 +899,6 @@ def media_keep_selection(
     return ranked.select(*singletons.columns).unionByName(singletons)
 
 
-def _documents_as_media_assets(
-    spark, sf_dir: str, kind: str, mime: str, make_payload
-) -> DataFrame:
-    """Shared fixture-adapter skeleton for the REAL decode paths: each
-    document's utf-8 bytes pass through ``make_payload`` (deterministic
-    byte-structure content re-encoded with the engine's own encoders)
-    so the real parsers run with fake=False on every row. One body for
-    all four formats — the encode call is the only variation."""
-
-    def _to_assets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                {
-                    "asset_id": int(did),
-                    "kind": kind,
-                    "payload": make_payload((text or "").encode("utf-8")),
-                    "mime": mime,
-                }
-                for did, text in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in ASSET_SCHEMA.fields])
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    return d.mapInPandas(_to_assets, ASSET_SCHEMA)
-
-
-def documents_as_png_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter for the REAL lossless-image decode paths:
-    byte-derived pixels cycled (text length % 10) through PNG,
-    little-endian uncompressed TIFF, big-endian TIFF-LZW with the
-    horizontal predictor, binary PGM (P5), QOI, farbfeld, a
-    DIB-coded ICO, an RLE TGA (decoded via the kind-tag route: the
-    format has no magic), an RLE Radiance HDR, an uncompressed
-    32-bit DDS, a lossless WebP (VP8L; feature flags cycled so
-    subtract-green, LZ77 runs and the color cache all run at scale)
-    and an OpenEXR (compression cycled none/RLE/ZIPS/ZIP) — so the
-    format-blind geometry oracle (`png_decode_meta`) value-verifies
-    every lossless-class image decoder through one query (no fake on
-    any row)."""
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.imagecodec import (
-            encode_dds_rgb32_gray8,
-            encode_farbfeld_gray8,
-            encode_hdr_gray8,
-            encode_ico_gray8,
-            encode_png_gray8,
-            encode_pnm_gray8,
-            encode_qoi_gray8,
-            encode_tga_gray8,
-            encode_tiff_gray8,
-        )
-
-        img = _fake_pixels(raw)[0]
-        sel = len(raw) % 12
-        if sel == 0:
-            return encode_png_gray8(img)
-        if sel == 1:
-            return encode_tiff_gray8(img)
-        if sel == 2:
-            return encode_tiff_gray8(img, lzw=True, big_endian=True,
-                                     predictor=True)
-        if sel == 3:
-            return encode_pnm_gray8(img)
-        if sel == 4:
-            return encode_qoi_gray8(img)
-        if sel == 5:
-            return encode_farbfeld_gray8(img)
-        if sel == 6:
-            return encode_ico_gray8(img, png_entry=False)
-        if sel == 7:
-            return encode_tga_gray8(img, rle=True)
-        if sel == 8:
-            return encode_hdr_gray8(img)
-        if sel == 9:
-            return encode_dds_rgb32_gray8(img)
-        if sel == 10:
-            from dedup_spark.functions.webp import encode_webp_gray8
-
-            return encode_webp_gray8(
-                img,
-                subtract_green=bool(len(raw) % 2),
-                lz77=True,
-                cache_bits=4 if len(raw) % 3 == 0 else 0,
-            )
-        from dedup_spark.functions.exr import encode_exr_gray8
-
-        return encode_exr_gray8(
-            img,
-            compression=("none", "rle", "zips", "zip")[len(raw) % 4],
-            pixel_type="float" if len(raw) % 2 else "half",
-        )
-
-    return _documents_as_media_assets(spark, sf_dir, "image", "image/png", make)
-
-
-def documents_as_raw_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter for the REAL camera-RAW parse+preview-decode
-    path: byte-derived pixels embedded as the JPEG preview of an
-    ARW / NEF / CR2 / ORF / RW2 container (text length % 5 cycles the
-    flavor, so every carrier — JPEGIF-in-IFD1, SubIFD strips,
-    CR2-marker strips, single-IFD JPEGIF, JpgFromRaw blob — and both
-    flavor-detection routes (magic word, Make tag) run at scale; no
-    fake on any row). The format-blind geometry oracle is
-    ``raw_decode_meta``."""
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.rawimage import encode_raw_like
-
-        img = _fake_pixels(raw)[0]
-        flavor = ("arw", "nef", "cr2", "orf", "rw2")[len(raw) % 5]
-        return encode_raw_like(img, flavor)
-
-    return _documents_as_media_assets(
-        spark, sf_dir, "image", "image/x-camera-raw", make
-    )
-
-
 def decode_frames(
     payload: bytes, fake: bool = False, max_frames: int | None = None
 ) -> tuple:
@@ -1046,7 +930,7 @@ VIDEO_FP_SCHEMA = StructType(
         StructField("asset_id", LongType(), False),
         StructField("vfp", LongType(), False),        # 64-bit clip fingerprint
         StructField("n_frames_sampled", LongType(), False),
-        StructField("decoder", StringType(), False),  # y4m | avi/mkv/mp4-mjpeg | fake
+        StructField("decoder", StringType(), False),  # a FORMATS decoder token | fake
         # frame geometry, free at fingerprint time (keeper resolution key)
         StructField("width", LongType(), True),
         StructField("height", LongType(), True),
@@ -1078,179 +962,6 @@ def video_near_dup_clusters(
     64-bit signature. Returns (vfp, asset_id, n_frames_sampled,
     decoder, width, height, cluster_id, cluster_size)."""
     return _signature_near_dup_clusters(video_fingerprint(assets, fake=fake), "vfp", config)
-
-
-def documents_as_y4m_assets(spark, sf_dir: str, n_frames: int = 8) -> DataFrame:
-    """Fixture adapter for the REAL raw/legacy video decode paths:
-    byte-derived pixels, rolled per frame, encoded as an actual Y4M
-    stream (text length % 5 == 0), an MPEG-1 video elementary stream
-    of escape-coded I-pictures (% 5 == 1), an MPEG-2 stream with
-    sequence/picture-coding extensions (% 5 == 2), the MPEG-1 ES
-    wrapped in a program stream (% 5 == 3) or the MPEG-2 ES wrapped
-    in a transport stream (% 5 == 4) — so the format-blind geometry
-    oracle (`y4m_decode_meta`) value-verifies the raw-plane parser,
-    both MPEG intra layer stacks AND both system-layer demuxers
-    through one query (same pattern as the six-carrier audio
-    fixture)."""
-    import numpy as np
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.containers import (
-            encode_mpeg_ps,
-            encode_mpeg_ts,
-        )
-        from dedup_spark.functions.mpeg1video import encode_m1v, encode_m2v
-        from dedup_spark.functions.videocodec import encode_y4m
-
-        img, w, h = _fake_pixels(raw)
-        img = img[: h - h % 2, : w - w % 2]  # C420 needs even dims
-        stack = np.stack([np.roll(img, 7 * i, axis=1) for i in range(n_frames)])
-        sel = len(raw) % 5
-        if sel == 0:
-            return encode_y4m(stack)
-        if sel == 1:
-            return encode_m1v(stack)
-        if sel == 2:
-            return encode_m2v(stack)
-        if sel == 3:
-            return encode_mpeg_ps(encode_m1v(stack))
-        return encode_mpeg_ts(encode_m2v(stack), stream_type=0x02)
-
-    return _documents_as_media_assets(
-        spark, sf_dir, "video", "video/x-yuv4mpeg", make
-    )
-
-
-def documents_as_mkv_assets(spark, sf_dir: str, n_frames: int = 4) -> DataFrame:
-    """Fixture adapter for the REAL MJPEG-in-Matroska decode path
-    (decoder == 'mkv-mjpeg' on every row): byte-derived pixels, rolled
-    per frame, each frame baseline-JPEG-encoded inside an EBML
-    SimpleBlock stream. Same pixel-geometry arithmetic as the Y4M
-    adapter, so the format-blind oracle reuses its dimension math
-    (no even-dim crop — JPEG takes any size)."""
-    import numpy as np
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.videocodec import encode_mkv_mjpeg
-
-        img, _w, _h = _fake_pixels(raw)
-        return encode_mkv_mjpeg(
-            np.stack([np.roll(img, 7 * i, axis=1) for i in range(n_frames)])
-        )
-
-    return _documents_as_media_assets(
-        spark, sf_dir, "video", "video/x-matroska", make
-    )
-
-
-def documents_as_jpeg_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter for the REAL JPEG decode path (decoder ==
-    'jpeg' on every row — the T.81 entropy decoder runs on every
-    document). Documents alternate deterministically between BASELINE
-    (SOF0) and PROGRESSIVE (SOF2) encodings by text length, so the
-    format-blind geometry oracle (`jpeg_decode_meta`) value-verifies
-    both scan architectures through one query."""
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.jpegcodec import (
-            encode_jpeg_gray8,
-            encode_jpeg_progressive_gray8,
-        )
-
-        enc = encode_jpeg_gray8 if len(raw) % 2 == 0 else encode_jpeg_progressive_gray8
-        return enc(_fake_pixels(raw)[0], quality=90)
-
-    return _documents_as_media_assets(spark, sf_dir, "image", "image/jpeg", make)
-
-
-def documents_as_wav_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter for the REAL audio decode paths: byte-derived
-    samples encoded as 16-bit PCM WAV, FLAC, Ogg/Vorbis, Ogg-FLAC,
-    FLAC-in-Matroska or Vorbis-in-Matroska (cycling deterministically
-    on text length % 6, like the video fixture) — so the format-blind
-    geometry oracle (`wav_decode_meta`) value-verifies all six real
-    audio carriers through one query (Vorbis sample counts are exact:
-    the EOS granule — or the Matroska Duration — truncates the final
-    lapped block to the encoder's input length)."""
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.audiocodec import (
-            encode_flac_pcm16,
-            encode_mka,
-            encode_ogg_flac_pcm16,
-            encode_wav_pcm16,
-        )
-        from dedup_spark.functions.vorbis import encode_vorbis_pcm16
-
-        x, rate = _fake_samples(raw)
-        sel = len(raw) % 6
-        if sel == 0:
-            return encode_wav_pcm16(x, rate)
-        if sel == 1:
-            return encode_flac_pcm16(x, rate)
-        if sel == 2:
-            return encode_vorbis_pcm16(x, rate)
-        if sel == 3:
-            return encode_ogg_flac_pcm16(x, rate)
-        if sel == 4:
-            return encode_mka(x, rate, codec="flac", lacing="xiph")
-        return encode_mka(x, rate, codec="vorbis", lacing="xiph")
-
-    return _documents_as_media_assets(spark, sf_dir, "audio", "audio/wav", make)
-
-
-def documents_as_mpeg_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter for the REAL MPEG-1 audio decode paths: byte-
-    derived samples encoded as Layer I / Layer II / Layer III cycling
-    on text length % 3, alternating mono/stereo on length % 4, so the
-    format-blind geometry oracle (`mpeg_decode_meta`) value-verifies
-    all three layer bitstream decoders — L1/L2 allocation,
-    scalefactors and grouping, and the full L3 chain (side info,
-    Huffman, requantize, hybrid IMDCT) — through one query."""
-
-    def make(raw: bytes) -> bytes:
-        import numpy as np
-
-        from dedup_spark.functions.mpeg3 import encode_mp3_pcm16
-        from dedup_spark.functions.mpegaudio import (
-            encode_mp1_pcm16,
-            encode_mp2_pcm16,
-        )
-
-        x, _rate = _fake_samples(raw)
-        if len(raw) % 4 >= 2:  # stereo variants
-            x = np.stack([x, np.roll(x, 1)], axis=1)
-        sel = len(raw) % 3
-        if sel == 0:
-            return encode_mp1_pcm16(x, 32000)
-        if sel == 1:
-            return encode_mp2_pcm16(x, 48000)
-        return encode_mp3_pcm16(x, 32000)
-
-    return _documents_as_media_assets(spark, sf_dir, "audio", "audio/mpeg", make)
-
-
-def documents_as_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter: documents → asset rows with payload =
-    utf-8 bytes prefixed by a deterministic per-row magic header
-    (cycles PNG/JPEG/MP3/MKV by doc_id) so kind detection and decode
-    plumbing are exercised without real media files."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # pinned 4-magic cycle (NOT derived from the format table: the table
-    # can grow without changing fixture payloads or the asset_meta oracle)
-    magics = ["89504e47", "ffd8ffe0", "49443303", "1a45dfa3"]
-    header = F.unhex(
-        F.element_at(
-            F.array(*[F.lit(m) for m in magics]),
-            (F.col("doc_id") % len(magics) + 1).cast("int"),
-        )
-    )
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.lit("blob").alias("kind"),
-        F.concat(header, F.encode("text", "utf-8")).alias("payload"),
-        F.lit(None).cast("string").alias("mime"),
-    )
 
 
 CONTAINER_META_SCHEMA = StructType(
@@ -1306,69 +1017,3 @@ def media_container_meta(assets: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows, columns=cols)
 
     return assets.mapInPandas(_meta, CONTAINER_META_SCHEMA)
-
-
-def documents_as_container_assets(spark, sf_dir: str) -> DataFrame:
-    """Fixture adapter for the REAL container parsers: each document's
-    byte length L deterministically picks a format (L%8: mp3 / mkv /
-    mp4 / adts / ogg / mpeg-ps / mpeg-ts / flv) and the stream parameters — the same integer
-    arithmetic the `container_meta` DuckDB oracle recomputes from
-    octet_length, so the parse results are value-verified
-    format-blind."""
-
-    def make(raw: bytes) -> bytes:
-        from dedup_spark.functions.containers import (
-            encode_adts,
-            encode_flv,
-            encode_mkv,
-            encode_mp3,
-            encode_mp4,
-            encode_mpeg_ps,
-            encode_mpeg_ts,
-            encode_ogg,
-        )
-
-        n = len(raw)
-        if n % 8 == 0:
-            return encode_mp3(3 + n % 7, 128, 44100, seed=n)
-        if n % 8 == 1:
-            return encode_mkv(
-                1000 + n % 5000, ["V_TEST", "A_TEST", "S_TEST"][: 1 + n % 3]
-            )
-        if n % 8 == 2:
-            return encode_mp4(500 + n % 9000, ["vide", "soun"][: 1 + n % 2])
-        if n % 8 == 3:
-            return encode_adts(3 + n % 6, 40 + n % 50, 48000, seed=n)
-        if n % 8 == 4:
-            return encode_ogg(10000 + n % 90000, 48000, 2 + n % 3, seed=n)
-        if n % 8 == 7:
-            return encode_flv(video_payloads=[
-                bytes((n + k + j * 17) % 251 for j in range(40))
-                for k in range(2 + n % 9)
-            ])
-        # system layers: elementary-stream kind cycles m1v / m2v / mp2
-        # (PS) and m1v / mp2 (TS); filler bytes stay in 0x10..0xDF so
-        # no accidental start codes or frame syncs appear
-        filler = bytes(0x10 + (n + j * 13) % 0xC0 for j in range(60 + n % 80))
-        if n % 8 == 5:
-            k = (n // 8) % 3
-            if k == 0:
-                return encode_mpeg_ps(b"\x00\x00\x01\xb3" + filler)
-            if k == 1:
-                return encode_mpeg_ps(
-                    b"\x00\x00\x01\xb3" + filler + b"\x00\x00\x01\xb5")
-            return encode_mpeg_ps(b"\xff\xfd" + filler, stream_id=0xC0)
-        es_len = 100 + n % 400  # total ES length → TS packet count in SQL
-        if (n // 8) % 2 == 0:
-            head = b"\x00\x00\x01\xb3"
-        else:
-            head = b"\xff\xfd"
-        fill = bytes(0x10 + (n + j * 11) % 0xC0
-                     for j in range(es_len - len(head)))
-        if (n // 8) % 2 == 0:
-            return encode_mpeg_ts(head + fill, stream_type=0x02)
-        return encode_mpeg_ts(head + fill, stream_type=0x03, stream_id=0xC0)
-
-    return _documents_as_media_assets(
-        spark, sf_dir, "blob", "application/octet-stream", make
-    )

@@ -708,140 +708,94 @@ def q_asset_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     field is deterministic integer/string math over the payload bytes,
     so it oracles exactly (the DuckDB mirror reconstructs the payload
     and recomputes the high-nibble concentration from its hex form)."""
-    from dedup_spark.operators.multimodal import documents_as_assets, extract_asset_meta
+    from dedup_spark.operators.multimodal import extract_asset_meta
+    from dedup_spark.sources.assets import documents_as_assets
 
     return extract_asset_meta(documents_as_assets(spark, sf_dir))
 
 
 def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image decode at scale: every document rendered into an
-    actual PNG or TIFF (engine's own encoders, cycling by text
-    length), then hashed through the real decoders and the 32×32 DCT
-    pHash — ``fake=False``, so a silent fall-back to the stub is
-    impossible (decoder ∈ {png, tiff} on every row, visible in the
-    output). Rows-only contract by nature (a 2-D DCT has no DuckDB
+    """REAL image decode at scale: every document rendered by the
+    ``png`` asset fixture (``sources.assets.FIXTURES``: its encoders
+    cycle by text length), then hashed through the real decoders and
+    the 32×32 DCT pHash — ``fake=False``, so a silent fall-back to the
+    stub is impossible (``decoder`` names the real decoder on every
+    row). Rows-only contract by nature (a 2-D DCT has no DuckDB
     mirror); bit-level determinism and the Hamming-gate semantics are
     pytest-gated in tests/test_imagecodec.py."""
-    from dedup_spark.operators.multimodal import (
-        documents_as_png_assets,
-        image_phash,
-    )
+    from dedup_spark.operators.multimodal import image_phash
+    from dedup_spark.sources.assets import documents_as
 
-    return image_phash(documents_as_png_assets(spark, sf_dir)).orderBy("asset_id")
+    return image_phash(documents_as(spark, sf_dir, "png")).orderBy("asset_id")
 
 
 def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio decode at scale: every document rendered into an
-    actual 16-bit PCM WAV, FLAC or Ogg/Vorbis stream (engine's own
-    encoders, cycling by text length), then decoded through the real
-    parser stacks and fingerprinted (65-band log-energy envelope,
-    Haitsma-Kalker-style) — ``fake=False``, so a silent fall-back to
-    the stub is impossible (decoder ∈ {wav, flac, vorbis} on every
-    row). Rows-only contract by nature (a windowed FFT has no DuckDB
-    mirror); determinism and the Hamming-gate semantics are
-    pytest-gated in tests/test_audiocodec.py and
-    tests/test_vorbis.py."""
-    from dedup_spark.operators.multimodal import (
-        audio_fingerprint,
-        documents_as_wav_assets,
-    )
+    """REAL audio decode at scale: every document rendered by the
+    ``wav`` asset fixture (``sources.assets.FIXTURES``), then decoded
+    through the real parser stacks and fingerprinted (65-band
+    log-energy envelope, Haitsma-Kalker-style) — ``fake=False``, so a
+    silent fall-back to the stub is impossible (``decoder`` names the
+    real decoder on every row). Rows-only contract by nature (a
+    windowed FFT has no DuckDB mirror); determinism and the
+    Hamming-gate semantics are pytest-gated in tests/test_audiocodec.py
+    and tests/test_vorbis.py."""
+    from dedup_spark.operators.multimodal import audio_fingerprint
+    from dedup_spark.sources.assets import documents_as
 
-    return audio_fingerprint(documents_as_wav_assets(spark, sf_dir)).orderBy(
-        "asset_id"
-    )
+    return audio_fingerprint(documents_as(spark, sf_dir, "wav")).orderBy("asset_id")
 
 
-def _decoded_meta_query(spark: SparkSession, sf_dir: str, modality: str) -> DataFrame:
-    """Value-verified REAL-decode round trip: the fixture adapters
-    derive pixel/sample/frame geometry from each document's byte
-    length by known integer arithmetic, encode a real file, and the
-    engine DECODES it back — so DuckDB can recompute what the real
-    decoder must output without ever touching the file format. A
+# decode facet → the geometry its real decoder gives back, as
+# (schema, decoded tuple → column values); the decoder token is last
+_DECODED_GEOMETRY = {
+    "pixels": ("width long, height long", lambda out: out[1:3]),
+    "samples": ("n_samples long, sample_rate long", lambda out: (out[0].shape[0], out[1])),
+    "frames": (
+        "n_frames long, width long, height long",
+        lambda out: (out[0].shape[0], out[0].shape[2], out[0].shape[1]),
+    ),
+}
+
+
+def _decoded_meta_query(
+    spark: SparkSession, sf_dir: str, name: str, extra: dict | None = None
+) -> DataFrame:
+    """Value-verified REAL-decode round trip: the ``name`` asset
+    fixture (``sources.assets.FIXTURES``) derives pixel/sample/frame
+    geometry from each document's byte length by known integer
+    arithmetic and encodes a real file, and the engine DECODES it back
+    through the row's decoder facet — so DuckDB can recompute what the
+    real decoder must output without ever touching the file format. A
     decoder that mis-parses the header, drops a plane, or mis-strides
     a row produces the wrong geometry and hash-mismatches. (The DSP
     half — DCT/FFT bit patterns — stays pytest-gated; this oracles the
-    parsing half.) fake=False throughout: a stub fallback is
-    impossible."""
+    parsing half.) ``extra`` adds string columns, each a function of
+    the payload, before ``decoder``. fake=False throughout: a stub
+    fallback is impossible."""
     import pandas as pd
 
-    from dedup_spark.operators.multimodal import (
-        decode_frames,
-        decode_pixels,
-        decode_samples,
-        documents_as_png_assets,
-        documents_as_wav_assets,
-        documents_as_y4m_assets,
+    from dedup_spark.operators import multimodal
+    from dedup_spark.sources.assets import FIXTURES, documents_as
+
+    extra = extra or {}
+    facet = FIXTURES[name].facet
+    decode = getattr(multimodal, f"decode_{facet}")
+    geometry_schema, geometry = _DECODED_GEOMETRY[facet]
+    schema = ", ".join(
+        ["asset_id long", geometry_schema, *(f"{c} string" for c in extra), "decoder string"]
     )
-
-    if modality in ("png", "jpeg"):
-        from dedup_spark.operators.multimodal import documents_as_jpeg_assets
-
-        adapter = documents_as_png_assets if modality == "png" else documents_as_jpeg_assets
-        assets = adapter(spark, sf_dir)
-
-        def meta(raw: bytes) -> dict:
-            _img, w, h, dec = decode_pixels(raw, fake=False)
-            return {"width": w, "height": h, "decoder": dec}
-
-        schema = "asset_id long, width long, height long, decoder string"
-    elif modality == "raw":
-        from dedup_spark.functions.rawimage import parse_raw
-        from dedup_spark.operators.multimodal import documents_as_raw_assets
-
-        assets = documents_as_raw_assets(spark, sf_dir)
-
-        def meta(raw: bytes) -> dict:
-            _img, w, h, dec = decode_pixels(raw, fake=False)
-            return {
-                "width": w,
-                "height": h,
-                "make": parse_raw(raw)["make"],
-                "decoder": dec,
-            }
-
-        schema = (
-            "asset_id long, width long, height long, make string, decoder string"
-        )
-    elif modality in ("wav", "mpeg"):
-        if modality == "mpeg":
-            from dedup_spark.operators.multimodal import documents_as_mpeg_assets
-
-            assets = documents_as_mpeg_assets(spark, sf_dir)
-        else:
-            assets = documents_as_wav_assets(spark, sf_dir)
-
-        def meta(raw: bytes) -> dict:
-            x, rate, dec = decode_samples(raw, fake=False)
-            return {"n_samples": int(x.shape[0]), "sample_rate": rate, "decoder": dec}
-
-        schema = "asset_id long, n_samples long, sample_rate long, decoder string"
-    else:  # y4m | mkv — same frame-stack meta, different real container
-        if modality == "mkv":
-            from dedup_spark.operators.multimodal import documents_as_mkv_assets
-
-            assets = documents_as_mkv_assets(spark, sf_dir)
-        else:
-            assets = documents_as_y4m_assets(spark, sf_dir)
-
-        def meta(raw: bytes) -> dict:
-            frames, _fps, dec = decode_frames(raw, fake=False)
-            n, h, w = frames.shape
-            return {"n_frames": n, "width": w, "height": h, "decoder": dec}
-
-        schema = "asset_id long, n_frames long, width long, height long, decoder string"
-
     cols = [c.split(" ")[0] for c in schema.split(", ")]
 
     def _run(batches):
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                d = meta(bytes(payload))
-                d["asset_id"] = int(aid)
-                rows.append(d)
+                raw = bytes(payload)
+                out = decode(raw, fake=False)
+                rows.append((int(aid), *geometry(out), *(f(raw) for f in extra.values()), out[-1]))
             yield pd.DataFrame(rows, columns=cols)
 
-    return assets.mapInPandas(_run, schema).orderBy("asset_id")
+    return documents_as(spark, sf_dir, name).mapInPandas(_run, schema).orderBy("asset_id")
 
 
 def q_png_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -862,7 +816,9 @@ def q_raw_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     five preview carriers) and decoded through the T.81 entropy
     decoder (fake=False; decoder names the flavor on every row).
     Geometry AND vendor identity value-verified format-blind."""
-    return _decoded_meta_query(spark, sf_dir, "raw")
+    from dedup_spark.functions.rawimage import parse_raw
+
+    return _decoded_meta_query(spark, sf_dir, "raw", {"make": lambda raw: parse_raw(raw)["make"]})
 
 
 def q_wav_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -896,44 +852,35 @@ def q_mkv_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_container_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container parsing at scale: every document rendered into a
-    spec-conforming MP3 / Matroska / MP4 stream (engine's own minimal
-    encoders, parameters derived from the document's byte length),
-    then walked by the real frame-header / EBML / box parsers —
+    """REAL container parsing at scale: every document rendered by the
+    ``container`` asset fixture (``sources.assets.FIXTURES``: stream
+    parameters derived from the document's byte length), then walked
+    by the real frame-header / EBML / box / system-layer parsers —
     duration, track count, codec inventory, the engine's native
     ffprobe analog (reference: media_dedup.rs:294-327). Value-verified
     by a format-blind oracle recomputing every field from
     octet_length arithmetic."""
-    from dedup_spark.operators.multimodal import (
-        documents_as_container_assets,
-        media_container_meta,
-    )
+    from dedup_spark.operators.multimodal import media_container_meta
+    from dedup_spark.sources.assets import documents_as
 
-    return media_container_meta(
-        documents_as_container_assets(spark, sf_dir)
-    ).orderBy("asset_id")
+    return media_container_meta(documents_as(spark, sf_dir, "container")).orderBy("asset_id")
 
 
 def q_video_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decode at scale: every document rendered into an
-    actual Y4M raw-video stream, an MPEG-1 intra-coded elementary
-    stream OR an MPEG-2 one (engine's own encoders, cycling by text
-    length), then parsed by the real YUV4MPEG2 / MPEG-1/2 I-picture
-    decoder, frame-sampled, per-frame pHashed and majority-voted into
+    """REAL video decode at scale: every document rendered by the
+    ``y4m`` asset fixture (``sources.assets.FIXTURES``), then parsed by
+    the real raw-plane / MPEG-1/2 I-picture decoders and system-layer
+    demuxers, frame-sampled, per-frame pHashed and majority-voted into
     one clip fingerprint — ``fake=False``, so a silent fall-back to
-    the stub is impossible (decoder == 'y4m'/'m1v'/'m2v' on every
+    the stub is impossible (``decoder`` names the real decoder on every
     row). Rows-only contract by nature (frame DCTs have no DuckDB
     mirror); determinism and the Hamming-gate semantics are
     pytest-gated in tests/test_videocodec.py and
     tests/test_mpeg1video.py."""
-    from dedup_spark.operators.multimodal import (
-        documents_as_y4m_assets,
-        video_fingerprint,
-    )
+    from dedup_spark.operators.multimodal import video_fingerprint
+    from dedup_spark.sources.assets import documents_as
 
-    return video_fingerprint(documents_as_y4m_assets(spark, sf_dir)).orderBy(
-        "asset_id"
-    )
+    return video_fingerprint(documents_as(spark, sf_dir, "y4m")).orderBy("asset_id")
 
 
 def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1371,10 +1318,10 @@ SELECT file_id,
             ELSE 0 END AS n_shingles3
 FROM t
 """,
-    # REAL-decode geometry oracles: the fixture adapters derive the
+    # REAL-decode geometry oracles: the asset fixtures derive the
     # encoded file's geometry from octet_length(text) by fixed integer
-    # arithmetic (multimodal._fake_pixels / _fake_samples /
-    # documents_as_y4m_assets), so DuckDB recomputes what the real
+    # arithmetic (multimodal._fake_pixels / _fake_samples and the
+    # sources.assets.FIXTURES sources), so DuckDB recomputes what the real
     # PNG/WAV/Y4M parser must decode back — format-blind, independent.
     "png_decode_meta": """
 SELECT CAST(doc_id AS BIGINT) AS asset_id,

@@ -126,7 +126,7 @@ def calibrate(n_cores: int, four_n: int, reps: int = 3) -> dict:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     m = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 3

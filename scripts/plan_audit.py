@@ -167,22 +167,21 @@ def main() -> None:
     # branch); clustering must reuse the block-pair groupBy+explode
     # form — NO self-join, NO cross join, Python only at the decode UDF
     from dedup_spark.operators.multimodal import (
-        documents_as_png_assets,
-        documents_as_wav_assets,
-        image_near_dup_clusters,
         audio_near_dup_clusters,
+        image_near_dup_clusters,
     )
+    from dedup_spark.sources.assets import documents_as
 
     summarize(
         "image near-dup (real PNG decode → pHash → block-pair join)",
-        image_near_dup_clusters(documents_as_png_assets(spark, sf_dir)),
+        image_near_dup_clusters(documents_as(spark, sf_dir, "png")),
         "exact-collapse window + block-pair groupBy + CC + one label join on "
         "exact_rep + size window; decode UDF evaluated once behind the "
         "collapse's lineage cut",
     )
     summarize(
         "audio near-dup (real WAV decode → band fingerprint → block-pair join)",
-        audio_near_dup_clusters(documents_as_wav_assets(spark, sf_dir)),
+        audio_near_dup_clusters(documents_as(spark, sf_dir, "wav")),
         "same machinery as image/text SimHash — one join family for every "
         "modality",
     )

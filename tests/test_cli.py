@@ -75,6 +75,12 @@ def test_make_config_precedence(tmp_path):
     assert cfg.include == ("src/**",)
 
 
+def test_cli_algorithm_reads_config_table():
+    # every config.HASH_ALGORITHMS entry parses, not a hand-kept subset
+    cfg = make_config(build_parser().parse_args(["t", "--algorithm", "fnv1a"]))
+    assert cfg.algorithm == "fnv1a"
+
+
 def test_filter_from(tmp_path):
     ff = tmp_path / "rules.txt"
     ff.write_text("# comment\n+ src/**\n- *.min.js\n")

@@ -8,9 +8,9 @@ from dedup_spark.operators.multimodal import (
     byte_shingles,
     decode_asset,
     detect_kind_from_magic,
-    documents_as_assets,
     extract_asset_meta,
 )
+from dedup_spark.sources.assets import documents_as_assets
 
 PNG = bytes.fromhex("89504e47") + b"fakepngdata"
 MP3 = bytes.fromhex("49443303") + b"fakemp3data"
