@@ -8,9 +8,8 @@ then compares only files of the same kind (media_dedup.rs:136-166,
 
 - :func:`match` — the first row whose magic holds: the payload's routed
   kind (``detect_kind_from_magic``) and format token
-  (``sniff_media_format``);
-- :func:`kind_from_magic_col` — the same first-match rule as one JVM
-  ``CASE WHEN`` column, so routing never runs a per-row Python UDF;
+  (``sniff_media_format``). The media orchestrator routes each asset
+  with it inside its one decode pass;
 - :func:`decoder_row` — the first row that matches and carries a decoder
   for one facet: ``pixels``, ``samples``, ``frames`` or ``parse``
   (``decode_pixels`` / ``decode_samples`` / ``decode_frames`` /
@@ -19,8 +18,8 @@ then compares only files of the same kind (media_dedup.rs:136-166,
 A magic is data: ``(offset, bytes)`` equalities, where a set of
 same-length bytes admits any one of them (a bit-mask test on one
 header byte is the set of values it admits), and a minimum length. The
-few tests data cannot say are each written once as a Python/Column
-pair (:class:`Check`).
+few tests data cannot say are each one predicate over the payload bytes
+(``Format.check``).
 Deliberate differences between routing and naming are row fields: ADTS
 and ASCII Netpbm have tokens but route to ``blob`` (no AAC decode; the
 ASCII forms read as plain text), and TGA has no magic at all (its row
@@ -36,27 +35,11 @@ double) is what the executors run.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import partial, reduce
+from functools import partial
 from importlib import import_module
-from operator import and_, or_
 from typing import Callable
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 Magic = tuple[tuple[int, "bytes | frozenset[bytes]"], ...]
-
-
-@dataclass(frozen=True)
-class Check:
-    """A magic test data cannot say, as a Python form over the payload
-    bytes and a Column form over the binary payload column. The two must
-    give the same routed kind on every payload: where a test has no
-    Column form (the TIFF-EP Make-tag walk), ``col`` is false and the
-    row that follows routes the same kind."""
-
-    py: Callable[[bytes], bool]
-    col: Callable[[Column, Column], Column]  # (payload, head) -> predicate
 
 
 @dataclass(frozen=True)
@@ -90,12 +73,13 @@ class Format:
     Decoder facets: ``pixels(raw) -> (img, w, h, decoder)``,
     ``samples(raw) -> (x, rate, decoder)``,
     ``frames(raw, max_frames) -> (frames, fps, decoder)`` and
-    ``parse(raw) -> container metadata``."""
+    ``parse(raw) -> container metadata``. ``check`` is a test on the
+    payload bytes that the magic cannot say."""
 
     token: str
     kind: str  # image | audio | video | blob
     magic: Magic | None
-    check: Check | None = None
+    check: Callable[[bytes], bool] | None = None
     min_len: int = 4
     pixels: Callable | None = None
     samples: Callable | None = None
@@ -118,32 +102,7 @@ class Format:
                     return False
             elif d[off : off + len(next(iter(want)))] not in want:
                 return False
-        return self.check is None or self.check.py(d)
-
-    def col(self, payload: Column, head: Column) -> Column:
-        """:meth:`matches` as a Column predicate (never used for
-        ``magic=None`` rows). ``head`` is :func:`_head` of ``payload``;
-        the minimum length and every magic part become one anchored
-        regex over it. Each Column call is a JVM round trip, so one
-        ``rlike`` per row keeps the expression cheap to build and plan."""
-        parts = (
-            (off, (want,) if isinstance(want, bytes) else sorted(want))
-            for off, want in self.magic
-        )
-        regex = "^" + "".join(
-            f"(?=.{{{2 * off}}}(?:{'|'.join(w.hex().upper() for w in alts)}))"
-            for off, alts in parts
-        ) + f"(?=.{{{2 * self.min_len}}})"
-        cond = head.rlike(regex)
-        return cond if self.check is None else cond & self.check.col(payload, head)
-
-
-_HEAD = 16  # payload bytes a magic or min_len may read (ASF's GUID is the longest)
-
-
-def _head(payload: Column) -> Column:
-    """Hex of the first ``_HEAD`` payload bytes."""
-    return F.hex(F.substring(payload, 1, _HEAD))
+        return self.check is None or self.check(d)
 
 
 def _bytes_where(keep: Callable[[int], bool]) -> frozenset[bytes]:
@@ -152,16 +111,11 @@ def _bytes_where(keep: Callable[[int], bool]) -> frozenset[bytes]:
     return frozenset(bytes([v]) for v in range(256) if keep(v))
 
 
-# ---- the tests data cannot say, each as a Python/Column pair -------------
+# ---- the tests data cannot say ------------------------------------------
 
 
 def _qt_size(d: bytes) -> bool:  # leading box size plausible: 8..file size
     return 8 <= int.from_bytes(d[:4], "big") <= len(d)
-
-
-def _qt_size_col(p: Column, head: Column) -> Column:
-    size = F.conv(head.substr(1, 8), 16, 10).cast("long")
-    return (size >= 8) & (size <= F.length(p))
 
 
 _TS_STRIDES = (188, 204)  # plain and DVB-capture (16 RS parity bytes) packets
@@ -173,34 +127,10 @@ def _ts_sync(d: bytes) -> bool:  # 0x47 sync at three packet boundaries
     )
 
 
-def _ts_sync_col(p: Column, head: Column) -> Column:
-    return reduce(
-        or_,
-        (
-            reduce(
-                and_,
-                (F.substring(p, k * s + 1, 1) == F.lit(b"\x47") for k in range(3)),
-                F.length(p) >= 3 * s,
-            )
-            for s in _TS_STRIDES
-        ),
-    )
-
-
 def _raw_flavor(d: bytes, flavor: str) -> bool:
     from dedup_spark.functions.rawimage import detect_raw_flavor
 
     return detect_raw_flavor(d) == flavor
-
-
-def _raw_flavor_col(p: Column, head: Column) -> Column:
-    # the IFD walk has no Column form; the plain TIFF row routes the
-    # same kind
-    return F.lit(False)
-
-
-QT_SIZE = Check(_qt_size, _qt_size_col)
-TS_SYNC = Check(_ts_sync, _ts_sync_col)
 
 
 # ---- decoders whose bodies are more than one codec call ------------------
@@ -374,7 +304,7 @@ _MP3_PARSE = Codec("containers.parse_mp3")
 _RAW_PREVIEW = Codec("rawimage.decode_raw_preview")  # token = the RAW flavor
 
 LEGACY_QT = Format(
-    "mov", "video", ((4, QT_ATOMS),), QT_SIZE, min_len=16,
+    "mov", "video", ((4, QT_ATOMS),), _qt_size, min_len=16,
     frames=Codec("videocodec.decode_mp4_mjpeg", "mov-mjpeg", sampled=True),
     parse=_MP4_PARSE,
 )
@@ -429,8 +359,7 @@ FORMATS: tuple[Format, ...] = (
     Format("orf", "image", ((0, frozenset((b"IIRO", b"IIRS"))),), pixels=_RAW_PREVIEW),
     Format("rw2", "image", ((0, b"II\x55\x00"),), pixels=_RAW_PREVIEW),
     *(
-        Format(flavor, "image", _TIFF,
-               Check(partial(_raw_flavor, flavor=flavor), _raw_flavor_col),
+        Format(flavor, "image", _TIFF, partial(_raw_flavor, flavor=flavor),
                pixels=_RAW_PREVIEW)
         for flavor in ("cr2", "arw", "nef")
     ),
@@ -466,7 +395,7 @@ FORMATS: tuple[Format, ...] = (
            parse=_MP4_PARSE),
     Format("mp4", "video", ((4, b"ftyp"),), frames=_MP4_FRAMES, parse=_MP4_PARSE),
     LEGACY_QT,
-    Format("ts", "video", (), TS_SYNC,
+    Format("ts", "video", (), _ts_sync,
            frames=partial(_system_frames, wrapper="ts"),
            samples=partial(_system_samples, wrapper="ts"),
            parse=Codec("containers.parse_mpeg_ts")),
@@ -541,16 +470,3 @@ def sniff_media_format(payload: bytes | None) -> str | None:
     the reference's unwrap_or(usize::MAX)."""
     row = match(payload)
     return row.token if row else None
-
-
-def kind_from_magic_col(payload: Column) -> Column:
-    """``detect_kind_from_magic`` as a pure COLUMN expression (JVM
-    codegen — no Python UDF in the routing hot path): one ``CASE WHEN``
-    branch per row, in table order."""
-    head = _head(payload)
-    first, *rest = (r for r in FORMATS if r.magic is not None)
-    kind = F.when(first.col(payload, head), first.kind)
-    for row in rest:
-        kind = kind.when(row.col(payload, head), row.kind)
-    return kind.otherwise("blob")
-

@@ -31,13 +31,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# payload routing (kind, JVM kind column, format token) and every decoder
-# lookup read the one format table; the sniffers are re-exported here
+# payload routing (kind, format token) and every decoder lookup read the
+# one format table; the sniffers are re-exported here
 from dedup_spark.functions.formats import (
     FORMATS,
     decoder_row,
     detect_kind_from_magic,
-    kind_from_magic_col,
     load,
     match,
     sniff_media_format,
@@ -244,21 +243,21 @@ def _fake_frames(payload: bytes):
 _STUB_POLICY = {
     "pixels": (
         "imagecodec.ImageDecodeError", _fake_pixels,
-        "payload is not a numpy-decodable image (PNG/BMP/baseline JPEG); "
-        "other formats need codec libs not present in this environment — "
-        "pass fake=True for the deterministic fake decoder",
+        "payload is not an image any FORMATS row decodes "
+        "(functions/formats.py) — pass fake=True for the deterministic "
+        "fake decoder",
     ),
     "samples": (
         "audiocodec.AudioDecodeError", _fake_samples,
-        "payload is not a stdlib-decodable audio format (WAV/PCM); "
-        "compressed codecs need libs not present in this environment — "
-        "pass fake=True for the deterministic fake decoder",
+        "payload is not audio any FORMATS row decodes "
+        "(functions/formats.py) — pass fake=True for the deterministic "
+        "fake decoder",
     ),
     "frames": (
         "videocodec.VideoDecodeError", _fake_frames,
-        "payload is not a numpy-decodable video (Y4M raw, MJPEG in AVI/MKV/MP4); "
-        "compressed containers need codec libs not present in this "
-        "environment — pass fake=True for the deterministic fake decoder",
+        "payload is not a video any FORMATS row decodes "
+        "(functions/formats.py) — pass fake=True for the deterministic "
+        "fake decoder",
     ),
 }
 
@@ -500,11 +499,11 @@ def _fingerprints(
 
 
 def image_phash(assets: DataFrame, fake: bool = False) -> DataFrame:
-    """Per-image 64-bit DCT perceptual hash over REAL decoders where
-    numpy + the stdlib suffice (PNG/BMP/baseline JPEG), the
-    deterministic fake elsewhere when ``fake=True`` (reference image
-    pHash, /root/reference/src/media_dedup.rs:182-202). Non-image rows
-    are dropped; ``decoder`` says which decode path produced each row;
+    """Per-image 64-bit DCT perceptual hash over the ``FORMATS`` rows'
+    ``pixels`` decoders (``decode_pixels``), the deterministic fake
+    elsewhere when ``fake=True`` (reference image pHash,
+    media_dedup.rs:182-202). Non-image rows are
+    dropped; ``decoder`` says which decode path produced each row;
     an undecodable image raises NotImplementedError when ``fake=False``.
 
     mapInPandas Arrow batches; the hash lands in a LongType column
@@ -567,8 +566,9 @@ def _signature_near_dup_clusters(
 def image_near_dup_clusters(
     assets: DataFrame, config=None, fake: bool = False
 ) -> DataFrame:
-    """Image near-dup end-to-end: real decode (PNG/BMP) → DCT pHash →
-    Hamming block-pair probing join → connected components — the
+    """Image near-dup end-to-end: decode (the ``FORMATS`` ``pixels``
+    decoders) → DCT pHash → Hamming block-pair probing join →
+    connected components — the
     reference's image similarity path (media_dedup.rs:354-377, d ≤ 6
     of 64 ⇔ ≥90%) on the engine's existing scale machinery.
 
@@ -607,24 +607,24 @@ AUDIO_FP_SCHEMA = StructType(
 
 
 def audio_fingerprint(assets: DataFrame, fake: bool = False) -> DataFrame:
-    """Per-clip 64-bit band-energy fingerprint over the REAL WAV
-    decoder (``functions/audiocodec.py``), deterministic fake for
-    non-WAV kinds when ``fake=True`` (reference audio fingerprint,
-    /root/reference/src/audio_fingerprint.rs:9-121). Non-audio rows
-    are dropped; ``decoder`` marks which decode path produced each
-    row; undecodable rows raise as in ``image_phash``. mapInPandas
-    Arrow batches; LongType output bit-compatible with the SimHash
-    Hamming machinery."""
+    """Per-clip 64-bit band-energy fingerprint over the ``FORMATS``
+    rows' ``samples`` decoders (``decode_samples``), deterministic
+    fake for undecodable payloads when ``fake=True`` (reference audio
+    fingerprint, audio_fingerprint.rs:9-121).
+    Non-audio rows are dropped; ``decoder`` marks which decode path
+    produced each row; undecodable rows raise as in ``image_phash``.
+    mapInPandas Arrow batches; LongType output bit-compatible with the
+    SimHash Hamming machinery."""
     return _fingerprints(assets, "audio", AUDIO_FP_SCHEMA, fake)
 
 
 def audio_near_dup_clusters(
     assets: DataFrame, config=None, fake: bool = False
 ) -> DataFrame:
-    """Audio near-dup end-to-end: real WAV decode → band-energy
-    fingerprint → the same Hamming block-pair join + CC as every other
-    64-bit signature. Returns (afp, asset_id, decoder, cluster_id,
-    cluster_size)."""
+    """Audio near-dup end-to-end: decode (the ``FORMATS`` ``samples``
+    decoders) → band-energy fingerprint → the same Hamming block-pair
+    join + CC as every other 64-bit signature. Returns (afp, asset_id,
+    decoder, cluster_id, cluster_size)."""
     return _signature_near_dup_clusters(audio_fingerprint(assets, fake=fake), "afp", config)
 
 
@@ -650,8 +650,11 @@ def media_near_dup_clusters(
     Cluster ids are namespaced by modality, so cross-kind pairs can
     never merge, exactly the reference's gate.
 
-    Every routed asset is decoded in ONE mapInPandas pass that
-    dispatches on its modality (``_fingerprint``), and the image, audio
+    Every asset is routed and decoded in ONE mapInPandas pass: the
+    first ``FORMATS`` row its magic matches names the modality unless
+    that row's kind is ``blob``, else the caller's ``kind`` tag (a
+    ``blob`` result goes straight to byte shingles); the pass
+    dispatches on that modality (``_fingerprint``), and the image, audio
     and video signatures share ONE Hamming join keyed by modality
     (``_signature_edges``). The leftover assets add the byte-shingle
     pipeline's ``edges()`` (members and verified pairs), and ONE
@@ -677,40 +680,37 @@ def media_near_dup_clusters(
     from dedup_spark.operators.cc import attach_labels, connected_components
 
     cfg = config or DedupConfig()
-    # routing = content magic first, the caller's kind tag as the
-    # fallback — exactly the reference's detect_media_type order
-    # (content via `infer`, THEN extension-based detection,
-    # media_dedup.rs:136-163). The fallback is what routes magic-less
-    # formats a caller knows about (TGA from a .tga path); a wrong tag
-    # only costs a failed decode + the byte-shingle reroute.
-    magic_kind = kind_from_magic_col(F.col("payload"))
-    tag_kind = F.when(
-        F.col("kind").isin("image", "audio", "video"), F.col("kind")
-    ).otherwise(F.lit("blob"))
-    # the decode pass and the leftover anti-join both consume this
-    # frame — cut lineage so the upstream scan + magic sniff run once
-    tagged = lineage_cut(
-        assets.withColumn(
-            "_m",
-            F.when(magic_kind != "blob", magic_kind).otherwise(tag_kind),
-        ),
-        cfg,
-        eager=False,
-    )
+    # the decode pass and the leftover anti-join both read the input:
+    # cut its lineage so the upstream scan runs once
+    assets = lineage_cut(assets, cfg, eager=False)
     meta_cols = ("width", "height") if with_meta else ()
     names = ["asset_id", "modality", "sig", "decoder", *meta_cols]
 
     def _sigs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def attempts(modality: str, raw: bytes) -> Iterator[str]:
+        def attempts(kind: str, raw: bytes) -> Iterator[str]:
+            # routing = content magic first, the caller's kind tag as the
+            # fallback — exactly the reference's detect_media_type order
+            # (content via `infer`, THEN extension-based detection,
+            # media_dedup.rs:136-163). The fallback is what routes
+            # magic-less formats a caller knows about (TGA from a .tga
+            # path); a wrong tag only costs a failed decode + the
+            # byte-shingle reroute. Blob rows yield nothing.
+            row = match(raw, FORMATS)
+            if row is not None and row.kind != "blob":
+                modality = row.kind
+            elif kind in ("image", "audio", "video"):
+                modality = kind
+            else:
+                return
             yield modality
             if modality == "video" and any(r.audio_retry and r.matches(raw) for r in FORMATS):
                 yield "audio"
 
         for pdf in batches:
             rows = []
-            for aid, routed, payload in zip(pdf["asset_id"], pdf["_m"], pdf["payload"]):
+            for aid, kind, payload in zip(pdf["asset_id"], pdf["kind"], pdf["payload"]):
                 raw = bytes(payload) if payload is not None else b""
-                for modality in attempts(routed, raw):
+                for modality in attempts(kind, raw):
                     try:
                         fp = _fingerprint(FORMATS, modality, raw, fake)
                     except NotImplementedError:
@@ -735,12 +735,10 @@ def media_near_dup_clusters(
     # is cut here (without the cut the ~100 ms/asset JPEG decode would
     # run twice); _signature_edges then cuts its collapsed frame, as
     # the text pipeline does
-    sigs = lineage_cut(
-        tagged.filter(F.col("_m") != "blob").mapInPandas(_sigs, schema), cfg, eager=False
-    )
+    sigs = lineage_cut(assets.mapInPandas(_sigs, schema), cfg, eager=False)
 
     members, pairs = _signature_edges(sigs, "sig", cfg, by=("modality",))
-    pipe, files = _blob_pipeline(tagged.join(sigs.select("asset_id"), "asset_id", "left_anti"), cfg)
+    pipe, files = _blob_pipeline(assets.join(sigs.select("asset_id"), "asset_id", "left_anti"), cfg)
     blob_members, blob_pairs = pipe.edges(files)
     blob_members = blob_members.select(
         F.col("file_id").alias("asset_id"), F.lit("blob").alias("modality"),
@@ -941,26 +939,27 @@ VIDEO_FP_SCHEMA = StructType(
 def video_fingerprint(
     assets: DataFrame, max_frames: int = 16, fake: bool = False
 ) -> DataFrame:
-    """Per-clip 64-bit fingerprint over the REAL video decoders (Y4M,
-    MJPEG-AVI): evenly sampled frames → per-frame DCT pHash → bitwise
-    majority vote (reference frame-hash design,
-    /root/reference/src/video_fingerprint.rs:11-103). Non-video rows
-    are dropped; ``decoder`` marks the decode path; undecodable rows
-    raise as in ``image_phash``. Compressed containers decode
-    ONLY the sampled frames (``decode_frames(max_frames=…)``). Robust
-    to per-frame noise/re-encode of the SAME frame sequence; a trimmed
-    clip samples a different grid and is a different sequence by this
-    scheme (documented, matching the reference's sequence compare)."""
+    """Per-clip 64-bit fingerprint over the ``FORMATS`` rows'
+    ``frames`` decoders (``decode_frames``): evenly sampled frames →
+    per-frame DCT pHash → bitwise majority vote (reference frame-hash
+    design, video_fingerprint.rs:11-103). Non-video rows are dropped;
+    ``decoder`` marks the decode path; undecodable rows raise as in
+    ``image_phash``. Compressed containers decode ONLY the sampled
+    frames (``decode_frames(max_frames=…)``). Robust to per-frame
+    noise/re-encode of the SAME frame sequence; a trimmed clip samples
+    a different grid and is a different sequence by this scheme
+    (documented, matching the reference's sequence compare)."""
     return _fingerprints(assets, "video", VIDEO_FP_SCHEMA, fake, max_frames)
 
 
 def video_near_dup_clusters(
     assets: DataFrame, config=None, fake: bool = False
 ) -> DataFrame:
-    """Video near-dup end-to-end: real Y4M decode → majority frame
-    pHash → the same Hamming block-pair join + CC as every other
-    64-bit signature. Returns (vfp, asset_id, n_frames_sampled,
-    decoder, width, height, cluster_id, cluster_size)."""
+    """Video near-dup end-to-end: decode (the ``FORMATS`` ``frames``
+    decoders) → majority frame pHash → the same Hamming block-pair
+    join + CC as every other 64-bit signature. Returns (vfp, asset_id,
+    n_frames_sampled, decoder, width, height, cluster_id,
+    cluster_size)."""
     return _signature_near_dup_clusters(video_fingerprint(assets, fake=fake), "vfp", config)
 
 

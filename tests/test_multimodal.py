@@ -180,10 +180,9 @@ def test_extract_features_feeds_embedding_ops(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 
-def test_kind_column_matches_python(spark):
-    """kind_from_magic_col (JVM codegen) must agree byte-for-byte with
-    detect_kind_from_magic (Python) over every magic family, short
-    payloads, and garbage."""
+def test_kind_table_routes_by_magic():
+    """detect_kind_from_magic gives each payload its expected routed
+    kind over every magic family, short payloads, and garbage."""
     import numpy as np
 
     from dedup_spark.functions.audiocodec import encode_wav_pcm16
@@ -194,112 +193,101 @@ def test_kind_column_matches_python(spark):
     )
     from dedup_spark.functions.jpegcodec import encode_jpeg_gray8
     from dedup_spark.functions.videocodec import encode_avi_mjpeg, encode_y4m
-    from dedup_spark.operators.multimodal import (
-        detect_kind_from_magic,
-        kind_from_magic_col,
-    )
-    from pyspark.sql import functions as F
 
     img = np.zeros((8, 8), dtype=np.uint8)
     frames = np.zeros((2, 8, 8), dtype=np.uint8)
-    payloads = [
-        encode_png_gray8(img),
-        encode_bmp_gray8(img),
-        encode_jpeg_gray8(img),
-        encode_wav_pcm16(np.zeros(64), 8000),
-        encode_y4m(frames),
-        encode_avi_mjpeg(frames),
-        b"ID3\x03 mp3 bytes",
-        b"\x1a\x45\xdf\xa3 matroska",
-        b"BMW text, not a bitmap",
-        b"RIFF\x00\x00\x00\x00XXXX",  # RIFF but unknown form type
-        b"",
-        b"ab",
-        b"plain text payload",
-        b"\xff\xd8\xff",  # 3-byte JPEG SOI only (len < 4 -> blob)
-        b"\x00\x00\x00\x14ftypisom\x00\x00\x00\x00isom",  # ISO-BMFF -> video
-        b"\x89PNGftyp!!",  # crafted: 4-byte magic family must WIN over offset-4 ftyp
-        b"GIF89a\x04\x00\x04\x00\x00\x00\x00",  # GIF -> image
-        b"fLaC\x80\x00\x00\x22" + bytes(34),  # FLAC -> audio
-        b"\x00\x00\x01\xb3\x02\x00\x20" + bytes(8),  # MPEG-1/2 ES -> video
-        b"OggS\x00\x02" + bytes(24),  # Ogg -> audio
-        b"\xff\xfb\x90\x00" + bytes(16),  # raw MP3 frame sync -> audio
-        b"\xff\xff\xff\xff" + bytes(16),  # sync but bad bitrate -> blob
-        b"\xff\xe0\x00\x00" + bytes(16),  # sync but reserved layer -> blob
-        b"II\x2a\x00" + bytes(16),  # TIFF little-endian -> image
-        b"MM\x00\x2a" + bytes(16),  # TIFF big-endian -> image
-        b"IIRO\x08\x00\x00\x00" + bytes(8),  # Olympus ORF -> image
-        b"IIRS\x08\x00\x00\x00" + bytes(8),  # ORF "IIRS" variant -> image
-        b"II\x55\x00\x18\x00\x00\x00" + bytes(8),  # Panasonic RW2 -> image
-        b"IIRX\x08\x00\x00\x00" + bytes(8),  # near-miss magic word -> blob
-        b"II\x55\x01" + bytes(12),  # near-miss RW2 magic -> blob
-        b"MMOR" + bytes(12),  # big-endian ORF form not recognized -> blob
-        b"\x00\x00\x00\x10moov" + bytes(8),  # legacy QuickTime -> video
-        b"\x00\x00\x00\x08wide" + bytes(8),  # legacy QuickTime -> video
-        b"abcdfree text, not a movie at all",  # implausible size -> blob
-        b"\x00\x00\x00\x04moov" + bytes(12),  # size < 8 -> blob
-        b"\x00\x00\x00\x40mdat" + bytes(8),  # size > file length -> blob
-        b"qoif\x00\x00\x00\x08\x00\x00\x00\x08\x03\x00",  # QOI -> image
-        b"farbfeld\x00\x00\x00\x02\x00\x00\x00\x02",  # farbfeld -> image
-        b"farbfel_ not quite",  # 8-byte magic near-miss -> blob
-        b"P5\n8 8\n255\n" + bytes(64),  # binary PGM -> image
-        b"P6 # c\n2 2 255 " + bytes(12),  # binary PPM, comment -> image
-        b"P2\n2 2\n255\n0 1 2 3\n",  # ASCII PGM = text at magic layer -> blob
-        b"P5x8 8",  # no whitespace after variant -> blob
-        b"Peter wrote plain text",  # 'P' + letter -> blob
-        b"\x00\x00\x01\x00\x01\x00" + bytes(20),  # ICO, 1 entry -> image
-        b"\x00\x00\x01\x00\x00\x00" + bytes(20),  # ICO count 0 -> blob
-        b"\x00\x00\x01\x00\xff\x00" + bytes(20),  # ICO count 255 -> blob
-        b"\x00\x00\x01\x00\x01\x01" + bytes(20),  # count high byte -> blob
-        b"#?RADIANCE\nFORMAT=32-bit_rle_rgbe\n\n-Y 2 +X 2\n",  # HDR -> image
-        b"#?RGBE\n\n-Y 1 +X 1\n" + bytes(4),  # RGBE variant -> image
-        b"#?RADIANT text, not an hdr",  # near-miss -> blob
-        b"#? comment-looking text",  # near-miss -> blob
-        b"DDS |" + bytes(124),  # DDS -> image
-        b"DDSX not a surface",  # near-miss -> blob
-        b"FORM\x00\x00\x00\x20AIFF" + bytes(8),  # AIFF -> audio
-        b"FORM\x00\x00\x00\x20AIFC" + bytes(8),  # AIFF-C -> audio
-        b"FORM\x00\x00\x00\x208SVX" + bytes(8),  # other IFF form -> blob
-        b".snd" + bytes(20),  # Sun AU -> audio
-        b".sndwich text, oddly",  # AU magic is only 4 bytes -> audio (header validates later)
-        b"\x00\x00\x01\xba\x44\x00\x04\x00\x04\x01\x00\x00\x03\xf8",  # MPEG-PS -> video
-        b"\x00\x00\x01\xb9",  # program end alone: not a pack header -> blob
-        (b"\x47" + bytes(187)) * 3,  # MPEG-TS: 3 sync'd packets -> video
-        (b"\x47" + bytes(187)) * 2,  # only 2 packets -> blob (too weak)
-        b"\x47" + bytes(187) + b"\x48" + bytes(187) + b"\x47" + bytes(187),  # broken sync -> blob
-        b"G major chord text " * 40,  # 'G'-led text, no 188-sync -> blob
-        b"FLV\x01\x05\x00\x00\x00\x09\x00\x00\x00\x00",  # FLV -> video
-        b"FLV\x02 wrong version text",  # FLV needs version 1 -> blob
-        b"\x30\x26\xb2\x75\x8e\x66\xcf\x11\xa6\xd9\x00\xaa\x00\x62\xce\x6c",  # ASF -> video
-        b"\x30\x26\xb2\x74 near-miss guid",  # not the ASF guid -> blob
-        (b"\x47" + bytes(203)) * 3,  # 204-byte DVB TS -> video
-        (b"\x47" + bytes(195)) * 3,  # 196-byte stride: neither form -> blob
+    expected = [
+        (encode_png_gray8(img), "image"),
+        (encode_bmp_gray8(img), "image"),
+        (encode_jpeg_gray8(img), "image"),
+        (encode_wav_pcm16(np.zeros(64), 8000), "audio"),
+        (encode_y4m(frames), "video"),
+        (encode_avi_mjpeg(frames), "video"),
+        (b"ID3\x03 mp3 bytes", "audio"),
+        (b"\x1a\x45\xdf\xa3 matroska", "video"),
+        (b"BMW text, not a bitmap", "blob"),
+        (b"RIFF\x00\x00\x00\x00XXXX", "blob"),  # RIFF but unknown form type
+        (b"", "blob"),
+        (b"ab", "blob"),
+        (b"plain text payload", "blob"),
+        (b"\xff\xd8\xff", "blob"),  # 3-byte JPEG SOI only (len < 4 -> blob)
+        (b"\x00\x00\x00\x14ftypisom\x00\x00\x00\x00isom", "video"),  # ISO-BMFF
+        (b"\x89PNGftyp!!", "image"),  # crafted: 4-byte magic family must WIN over offset-4 ftyp
+        (b"GIF89a\x04\x00\x04\x00\x00\x00\x00", "image"),  # GIF
+        (b"fLaC\x80\x00\x00\x22" + bytes(34), "audio"),  # FLAC
+        (b"\x00\x00\x01\xb3\x02\x00\x20" + bytes(8), "video"),  # MPEG-1/2 ES
+        (b"OggS\x00\x02" + bytes(24), "audio"),  # Ogg
+        (b"\xff\xfb\x90\x00" + bytes(16), "audio"),  # raw MP3 frame sync
+        (b"\xff\xff\xff\xff" + bytes(16), "blob"),  # sync but bad bitrate
+        (b"\xff\xe0\x00\x00" + bytes(16), "blob"),  # sync but reserved layer
+        (b"II\x2a\x00" + bytes(16), "image"),  # TIFF little-endian
+        (b"MM\x00\x2a" + bytes(16), "image"),  # TIFF big-endian
+        (b"IIRO\x08\x00\x00\x00" + bytes(8), "image"),  # Olympus ORF
+        (b"IIRS\x08\x00\x00\x00" + bytes(8), "image"),  # ORF "IIRS" variant
+        (b"II\x55\x00\x18\x00\x00\x00" + bytes(8), "image"),  # Panasonic RW2
+        (b"IIRX\x08\x00\x00\x00" + bytes(8), "blob"),  # near-miss magic word
+        (b"II\x55\x01" + bytes(12), "blob"),  # near-miss RW2 magic
+        (b"MMOR" + bytes(12), "blob"),  # big-endian ORF form not recognized
+        (b"\x00\x00\x00\x10moov" + bytes(8), "video"),  # legacy QuickTime
+        (b"\x00\x00\x00\x08wide" + bytes(8), "video"),  # legacy QuickTime
+        (b"abcdfree text, not a movie at all", "blob"),  # implausible size
+        (b"\x00\x00\x00\x04moov" + bytes(12), "blob"),  # size < 8
+        (b"\x00\x00\x00\x40mdat" + bytes(8), "blob"),  # size > file length
+        (b"qoif\x00\x00\x00\x08\x00\x00\x00\x08\x03\x00", "image"),  # QOI
+        (b"farbfeld\x00\x00\x00\x02\x00\x00\x00\x02", "image"),  # farbfeld
+        (b"farbfel_ not quite", "blob"),  # 8-byte magic near-miss
+        (b"P5\n8 8\n255\n" + bytes(64), "image"),  # binary PGM
+        (b"P6 # c\n2 2 255 " + bytes(12), "image"),  # binary PPM, comment
+        (b"P2\n2 2\n255\n0 1 2 3\n", "blob"),  # ASCII PGM = text at magic layer
+        (b"P5x8 8", "blob"),  # no whitespace after variant
+        (b"Peter wrote plain text", "blob"),  # 'P' + letter
+        (b"\x00\x00\x01\x00\x01\x00" + bytes(20), "image"),  # ICO, 1 entry
+        (b"\x00\x00\x01\x00\x00\x00" + bytes(20), "blob"),  # ICO count 0
+        (b"\x00\x00\x01\x00\xff\x00" + bytes(20), "blob"),  # ICO count 255
+        (b"\x00\x00\x01\x00\x01\x01" + bytes(20), "blob"),  # count high byte
+        (b"#?RADIANCE\nFORMAT=32-bit_rle_rgbe\n\n-Y 2 +X 2\n", "image"),  # HDR
+        (b"#?RGBE\n\n-Y 1 +X 1\n" + bytes(4), "image"),  # RGBE variant
+        (b"#?RADIANT text, not an hdr", "blob"),  # near-miss
+        (b"#? comment-looking text", "blob"),  # near-miss
+        (b"DDS |" + bytes(124), "image"),  # DDS
+        (b"DDSX not a surface", "blob"),  # near-miss
+        (b"FORM\x00\x00\x00\x20AIFF" + bytes(8), "audio"),  # AIFF
+        (b"FORM\x00\x00\x00\x20AIFC" + bytes(8), "audio"),  # AIFF-C
+        (b"FORM\x00\x00\x00\x208SVX" + bytes(8), "blob"),  # other IFF form
+        (b".snd" + bytes(20), "audio"),  # Sun AU
+        (b".sndwich text, oddly", "audio"),  # AU magic is only 4 bytes -> audio (header validates later)
+        (b"\x00\x00\x01\xba\x44\x00\x04\x00\x04\x01\x00\x00\x03\xf8", "video"),  # MPEG-PS
+        (b"\x00\x00\x01\xb9", "blob"),  # program end alone: not a pack header
+        ((b"\x47" + bytes(187)) * 3, "video"),  # MPEG-TS: 3 sync'd packets
+        ((b"\x47" + bytes(187)) * 2, "blob"),  # only 2 packets -> blob (too weak)
+        (b"\x47" + bytes(187) + b"\x48" + bytes(187) + b"\x47" + bytes(187), "blob"),  # broken sync
+        (b"G major chord text " * 40, "blob"),  # 'G'-led text, no 188-sync
+        (b"FLV\x01\x05\x00\x00\x00\x09\x00\x00\x00\x00", "video"),  # FLV
+        (b"FLV\x02 wrong version text", "blob"),  # FLV needs version 1
+        (b"\x30\x26\xb2\x75\x8e\x66\xcf\x11\xa6\xd9\x00\xaa\x00\x62\xce\x6c", "video"),  # ASF
+        (b"\x30\x26\xb2\x74 near-miss guid", "blob"),  # not the ASF guid
+        ((b"\x47" + bytes(203)) * 3, "video"),  # 204-byte DVB TS
+        ((b"\x47" + bytes(195)) * 3, "blob"),  # 196-byte stride: neither form
         # inputs where the hand-written sniffers used to disagree; each
         # now follows the one table row (choices listed in CHANGES.md)
-        b"BM\x36\x00\x00\x00\x01\x00\x00\x00" + bytes(8),  # BMP reserved bytes nonzero -> blob
-        b"GIF8 text, not a gif",  # GIF needs GIF87a/GIF89a -> blob
-        b"GIF87a\x04\x00\x04\x00\x00\x00\x00",  # GIF87a -> image
-        b"YUV4 text, not a stream",  # Y4M needs YUV4MPEG2 -> blob
-        b"YUV4MPEG2 W8 H8 F25:1\n",  # -> video
-        encode_ico_gray8(img, png_entry=False),  # ICO passing is_ico too -> image
-        b"P5\nxyz not a header",  # PNM whitespace then no digit -> blob
-        b"\xff\xea\x90\x00" + bytes(16),  # MPEG sync, reserved version -> blob
-        b"\xff\xf1\x50\x80" + bytes(16),  # ADTS: token aac, routed blob
-        b"\x30\x26\xb2\x75 only the 4-byte prefix",  # ASF needs the full GUID -> blob
-        b"\x89PNG not the 8-byte signature",  # PNG 4-byte magic -> image
-        b"ID3\x04\x00 v2.4 tag",  # any ID3v2 version -> audio
-        b"\xff\xd8\xff\xe0JFIF",  # 8 bytes, under the old 12-byte format floor
-        b"\x00\x00\x00\x08ftyp",  # 8-byte ISO-BMFF -> video
-        b"RIFFftyp" + bytes(8),  # unknown RIFF form, ftyp at offset 4 -> video
+        (b"BM\x36\x00\x00\x00\x01\x00\x00\x00" + bytes(8), "blob"),  # BMP reserved bytes nonzero
+        (b"GIF8 text, not a gif", "blob"),  # GIF needs GIF87a/GIF89a
+        (b"GIF87a\x04\x00\x04\x00\x00\x00\x00", "image"),  # GIF87a
+        (b"YUV4 text, not a stream", "blob"),  # Y4M needs YUV4MPEG2
+        (b"YUV4MPEG2 W8 H8 F25:1\n", "video"),
+        (encode_ico_gray8(img, png_entry=False), "image"),  # ICO passing is_ico too
+        (b"P5\nxyz not a header", "blob"),  # PNM whitespace then no digit
+        (b"\xff\xea\x90\x00" + bytes(16), "blob"),  # MPEG sync, reserved version
+        (b"\xff\xf1\x50\x80" + bytes(16), "blob"),  # ADTS: token aac, routed blob
+        (b"\x30\x26\xb2\x75 only the 4-byte prefix", "blob"),  # ASF needs the full GUID
+        (b"\x89PNG not the 8-byte signature", "image"),  # PNG 4-byte magic
+        (b"ID3\x04\x00 v2.4 tag", "audio"),  # any ID3v2 version
+        (b"\xff\xd8\xff\xe0JFIF", "image"),  # 8 bytes, under the old 12-byte format floor
+        (b"\x00\x00\x00\x08ftyp", "video"),  # 8-byte ISO-BMFF
+        (b"RIFFftyp" + bytes(8), "video"),  # unknown RIFF form, ftyp at offset 4
     ]
-    rows = [(i, bytearray(p)) for i, p in enumerate(payloads)]
-    df = spark.createDataFrame(rows, "i long, payload binary")
-    got = {
-        r["i"]: r["k"]
-        for r in df.select("i", kind_from_magic_col(F.col("payload")).alias("k")).collect()
-    }
-    for i, p in enumerate(payloads):
-        assert got[i] == detect_kind_from_magic(p), (i, p[:12], got[i])
+    for i, (payload, kind) in enumerate(expected):
+        assert detect_kind_from_magic(payload) == kind, (i, payload[:12])
 
 
 def test_format_row_decoder_is_the_only_dispatch(spark):
@@ -553,6 +541,34 @@ def test_media_near_dup_clusters_routes_by_kind(spark):
     ids = {out[i]["cluster_id"] for i in (1, 3, 5, 6)}
     assert len(ids) == 4
     assert out[5]["cluster_size"] == 1
+
+
+def test_media_orchestrator_magic_beats_tag(spark):
+    """Routing reads the payload magic first and the caller's kind tag
+    only where no routed format row matches: a PNG tagged audio is an
+    image; an ASCII PGM (a ``blob`` row at the magic layer) tagged image
+    decodes as an image; random bytes tagged video fail the video decode
+    and end on the byte-shingle path."""
+    import numpy as np
+
+    from dedup_spark.functions.imagecodec import encode_png_gray8, encode_pnm_gray8
+    from dedup_spark.operators.multimodal import media_near_dup_clusters
+
+    yy, xx = np.mgrid[0:16, 0:16]
+    img = np.minimum(yy * 9 + xx * 5, 255).astype(np.uint8)
+    pgm = encode_pnm_gray8(img, ascii_variant=True)
+    noise = np.random.default_rng(5).integers(0, 256, 2048, dtype=np.uint8).tobytes()
+    assert detect_kind_from_magic(pgm) == detect_kind_from_magic(noise) == "blob"
+    rows = [
+        (1, "audio", bytearray(encode_png_gray8(img)), None),
+        (2, "image", bytearray(pgm), None),
+        (3, "video", bytearray(noise), None),
+    ]
+    out = {
+        r["asset_id"]: (r["modality"], r["decoder"])
+        for r in media_near_dup_clusters(spark.createDataFrame(rows, ASSET_SCHEMA)).collect()
+    }
+    assert out == {1: ("image", "png"), 2: ("image", "pgm"), 3: ("blob", "bytes")}
 
 
 def test_one_signature_graph_gates_on_modality(spark):

@@ -324,31 +324,17 @@ def test_webp_joins_the_image_pipeline(spark):
     assert by_id[2]["decoder"] == "webp"
 
 
-def test_kind_column_sees_webp(spark):
-    from dedup_spark.operators.multimodal import kind_from_magic_col
-    import pyspark.sql.functions as F
-
-    payloads = [
-        encode_webp_gray8(_img(8, 8)),
-        b"RIFF\x10\x00\x00\x00WEBPVP8L\x00\x00\x00\x00",
-        b"RIFF\x10\x00\x00\x00WAVE" + bytes(8),
-        b"RIFFle text, oddly",
-    ]
-    df = spark.createDataFrame(
-        [(i, bytearray(p)) for i, p in enumerate(payloads)],
-        "i long, payload binary",
-    )
-    got = {
-        r["i"]: r["k"]
-        for r in df.select(
-            "i", kind_from_magic_col(F.col("payload")).alias("k")
-        ).collect()
-    }
+def test_kind_table_sees_webp():
     from dedup_spark.operators.multimodal import detect_kind_from_magic
 
-    for i, p in enumerate(payloads):
-        assert got[i] == detect_kind_from_magic(p), i
-    assert got[0] == "image" and got[1] == "image"
+    expected = [
+        (encode_webp_gray8(_img(8, 8)), "image"),
+        (b"RIFF\x10\x00\x00\x00WEBPVP8L\x00\x00\x00\x00", "image"),
+        (b"RIFF\x10\x00\x00\x00WAVE" + bytes(8), "audio"),
+        (b"RIFFle text, oddly", "blob"),
+    ]
+    for i, (payload, kind) in enumerate(expected):
+        assert detect_kind_from_magic(payload) == kind, i
 
 
 def test_animated_webp_first_frame_decodes():
